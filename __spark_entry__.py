@@ -796,14 +796,13 @@ def _q_ols_by_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_selection_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 via the DISTRIBUTED selection plan: exact quantile edges computed
-    with parallel prefix sums + broadcast rank join (no single-reducer
+    """A3 via the DISTRIBUTED rank-selection plan: exact quantile edges from
+    parallel prefix sums over the per-value sketch (no single-reducer
     percentile buffer) — hard-verified against DuckDB quantile_cont."""
-    from aumos_drift_detector_spark.config import DEFAULT_CONFIG
     from aumos_drift_detector_spark.operators.drift import quantile_edges_selection
 
     li = _t(spark, sf_dir, "lineitem")
-    edges = quantile_edges_selection(li, "l_extendedprice", 10, (), DEFAULT_CONFIG)
+    edges = quantile_edges_selection(li, "l_extendedprice", 10)
     return (
         edges.select(F.posexplode("edges").alias("bin_idx", "edge"))
         .select("bin_idx", F.round("edge", 6).alias("edge"))

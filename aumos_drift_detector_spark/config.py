@@ -42,19 +42,13 @@ class EngineConfig:
 
     # physical policy
     approx: bool = False              # exact quantiles/distinct for test parity
-    # exact-quantile physical plan: 'sketch' merges per-partition
-    # (value, count) maps in one final reducer (fine while distinct values
-    # are bounded); 'selection' computes the same exact edges via parallel
-    # prefix sums + broadcast rank join with NO single-reducer buffer — the
-    # path for continuous columns at 10^12 rows (distinct ~ rows)
-    exact_quantile_plan: str = "sketch"
     approx_percentile_accuracy: int = 10000
-    # adaptive sketch-collect: standalone PSI/KS/W1 materialize the per-value
-    # sketch once (persisted), count it, and run the driver kernel over the
-    # collected sketch when the count fits the cap; a larger count means the
-    # distinct-value set is data-proportional (continuous column at scale),
-    # so the operator falls back to the fully distributed prefix-sum plan
-    # REUSING the already-persisted sketch (no recomputation). 0 disables
+    # adaptive sketch-collect: PSI/KS/W1 build the per-value sketch once and
+    # probe it with limit(cap + 1); when it fits, that probe is the collect
+    # and a driver kernel finishes the test. A larger sketch means the
+    # distinct-value set is data-proportional (continuous column at scale):
+    # the sketch is persisted and one distributed prefix-sum ECDF over it
+    # produces the same verdicts, never re-reading the raw rows. 0 disables
     # the probe (always distributed). The cap bounds driver memory, not
     # cluster size: a sketch row is (double, long, long) ~24 B + overhead,
     # so 8M rows is ~200 MB through Arrow — modest for any driver that can

@@ -97,6 +97,7 @@ def ks_2samp_exact_sf(d: float, n: int, m: int) -> float:
     j_hi0 = min((h - 1) // n, m)
     a[1 : j_hi0 + 1] = 1.0
     scale_log = 0.0
+    prev_lo = 0
     for i in range(1, n + 1):
         # inside interval for row i: |i*m - j*n| < h
         lo = (i * m - h) // n + 1  # smallest j with i*m - j*n < h
@@ -104,11 +105,13 @@ def ks_2samp_exact_sf(d: float, n: int, m: int) -> float:
         hi = min((i * m + h - 1) // n, m)  # largest j with j*n - i*m < h
         if lo > hi:
             return 1.0  # band empty: no sample can have D < d
-        new = np.zeros(m + 1, dtype=np.float64)
-        new[lo : hi + 1] = np.cumsum(a[lo : hi + 1])
-        a = new
-        peak = a[hi]
-        if peak > 1e280:
+        # the band only moves right: clear what left it, then accumulate in
+        # place (entries above the previous hi are still zero)
+        a[prev_lo:lo] = 0.0
+        prev_lo = lo
+        seg = a[lo : hi + 1]
+        np.cumsum(seg, out=seg)
+        if seg[-1] > 1e280:
             a *= 2.0**-512
             scale_log += 512.0 * math.log(2.0)
     inside = a[m]

@@ -7,6 +7,14 @@ per group); the per-group finalization operates on k-element arrays
 not data. This is the Spark-first restatement of the reference's numpy
 kernels (reference adapters/statistical_tests/*.py), NOT a row-at-a-time port.
 
+PSI, KS, Wasserstein-1 and Anderson-Darling share one front door
+(``_sketch_tests``): ``per_value_sketch`` builds the per-(group, v) side
+counts once; when the sketch fits ``EngineConfig.sketch_collect_max_rows``
+one collect feeds the driver kernel table, otherwise one distributed ECDF
+over the persisted sketch (``_overcap_verdicts``) produces the same
+statistics. Both plans cut quantiles with the same rank selection and lerp,
+so their verdicts are identical.
+
 Grouped variants compute verdicts for every group (e.g. every `source`
 partition) in ONE job over the full table. Ungrouped variants mirror the
 reference's single-pair API including its ValueError semantics
@@ -15,11 +23,13 @@ reference's single-pair API including its ValueError semantics
 
 from __future__ import annotations
 
+from dataclasses import replace
+from functools import reduce
 from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -32,36 +42,59 @@ from aumos_drift_detector_spark.functions.kernels import (
     ks_verdict,
     psi_from_counts,
 )
+from aumos_drift_detector_spark.functions.numeric import (
+    anderson_darling_significance,
+)
 from aumos_drift_detector_spark.operators.profile import (
     bucket_by_edges,
     clean_values,
-    quantile_edges,
 )
 
 _REF, _PROD = 0, 1
 
 
 def _materialize_sketch(per_value: DataFrame, cap: int):
-    """Probe the per-(group, v) sketch and collect it when it fits ``cap``.
+    """Choose the front door's plan: collect the sketch, or persist it.
 
-    Returns ``(pdf, persisted)``: exactly one of the two is non-None.
-    Under the cap the probe (``limit(cap+1).toPandas()``) IS the full
-    collect — one job, no persist bookkeeping, identical cost to the
-    plain one-job plan at small scale (an earlier persist+count+collect
-    variant added ~0.4 s of cache-write and extra-job latency per query
-    at sf0.1 for no benefit).  On overflow the sketch is persisted and
-    handed to the caller's distributed fallback, which MUST route through
-    it (and unpersist when done): the fallback plans consume the sketch
-    3-4x (quantile boundaries, chunk totals, offset join), and without
-    the persist each consumer recomputes the corpus-scale aggregation
-    from scratch (measured 4x the bytes of the sketch itself).
+    Returns ``(pdf, persisted)``; exactly one of the two is non-None.
+    When the per-(group, v) sketch fits ``cap`` rows, the probe
+    ``limit(cap + 1).toPandas()`` IS the full collect: one job, nothing
+    cached, and the driver kernels take it from there. Over the cap, and
+    always at cap 0, the sketch is persisted for ``_overcap_verdicts`` and
+    the caller MUST unpersist it in a ``finally``. The over-cap plan reads
+    the sketch several times (range bounds, chunk totals, offset join, PSI
+    bins); without the cache each read would recompute the aggregation
+    from the raw rows.
     """
     from pyspark import StorageLevel
 
-    pdf = per_value.limit(cap + 1).toPandas()
-    if len(pdf) <= cap:
-        return pdf, None
+    if cap:
+        pdf = per_value.limit(cap + 1).toPandas()
+        if len(pdf) <= cap:
+            return pdf, None
     return None, per_value.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _join_on(
+    left: DataFrame, right: DataFrame, keys: Sequence[str]
+) -> DataFrame:
+    """Inner join with ``right`` broadcast, NULL-safe on every key.
+
+    A NULL group key is a group like any other (pandas keeps it on the
+    collect path), so a plain equi-join, which drops NULL keys, would make
+    the plans disagree. No keys means a cross join with the one-row side.
+    """
+    if not keys:
+        return left.crossJoin(F.broadcast(right))
+    rk = right.select(
+        *[F.col(k).alias(f"_rk_{k}") for k in keys],
+        *[c for c in right.columns if c not in keys],
+    )
+    cond = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"_rk_{k}")) for k in keys],
+    )
+    return left.join(F.broadcast(rk), cond).drop(*[f"_rk_{k}" for k in keys])
 
 
 def _cumulative_per_value(
@@ -142,7 +175,7 @@ def _cumulative_per_value(
             F.lead("_chunk_min_v").over(w_next).alias("_next_chunk_min")
         )
     offsets = chunk.select(*group_cols, "_cid", *off_cols)
-    joined = df.join(F.broadcast(offsets), [*group_cols, "_cid"])
+    joined = _join_on(df, offsets, [*group_cols, "_cid"])
     w_local = Window.partitionBy(*gcols, F.col("_cid")).orderBy("v").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -164,98 +197,114 @@ def _cumulative_per_value(
     return joined.select(*out_cols)
 
 
+# ---------------------------------------------------------------------------
+# Rank selection: exact quantiles of a group's reference multiset
+# ---------------------------------------------------------------------------
+
+def _lerp_quantiles(
+    lo: np.ndarray, hi: np.ndarray, probs: np.ndarray, n: int
+) -> np.ndarray:
+    """Linear interpolation between the order statistics of rank floor(k)
+    and ceil(k), k = p·(n−1) (numpy 'linear', Spark ``percentile`` and
+    DuckDB ``quantile_cont``). Both plans end here, so their quantiles are
+    bitwise identical."""
+    k = probs * (n - 1)
+    return lo + (k - np.floor(k)) * (hi - lo)
+
+
+def _weighted_percentiles(
+    values: np.ndarray, counts: np.ndarray, probs: np.ndarray
+) -> np.ndarray:
+    """Exact percentiles of the expanded multiset (Spark F.percentile /
+    numpy 'linear' semantics) from (sorted value, count) pairs."""
+    cum = np.cumsum(counts)
+    n = int(cum[-1])
+    k = probs * (n - 1)
+    lo = values[np.searchsorted(cum, np.floor(k), side="right")]
+    hi = values[np.searchsorted(cum, np.ceil(k), side="right")]
+    return _lerp_quantiles(lo, hi, probs, n)
+
+
+def _rank_picks(probs: np.ndarray) -> list[Column]:
+    """Aggregates that pick the order statistics ``_lerp_quantiles`` needs.
+
+    Run over ``_cumulative_per_value`` rows with ``c_ref`` as a sum column.
+    For every p_i they pick the reference values of rank floor(k) and
+    ceil(k), k = p_i·(n−1), computed with the same double arithmetic as
+    ``_weighted_percentiles`` (``repr`` round-trips p_i exactly into the
+    SQL double literal). Exactly one row of a group holds rank r
+    (``cum_c_ref - c_ref <= r < cum_c_ref``), so ``max`` over the other
+    rows' NULLs is that row's value: plain aggregates in the grouped
+    aggregation, with no join and no single-reducer percentile buffer.
+    """
+    return [
+        F.expr(
+            f"max(CASE WHEN {fn}({float(p)!r}D * (total_c_ref - 1)) "
+            f"BETWEEN cum_c_ref - c_ref AND cum_c_ref - 1 THEN v END)"
+        ).alias(f"_q{i}_{side}")
+        for i, p in enumerate(probs)
+        for side, fn in (("lo", "floor"), ("hi", "ceil"))
+    ]
+
+
+def _picked_quantiles(row, probs: np.ndarray, n: int) -> np.ndarray:
+    """Driver half of ``_rank_picks``: interpolate one group's picks."""
+    lo, hi = (
+        np.array([row[f"_q{i}_{side}"] for i in range(len(probs))], dtype=np.float64)
+        for side in ("lo", "hi")
+    )
+    return _lerp_quantiles(lo, hi, probs, n)
+
+
+def _driver_frame(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side table as a DataFrame. Going through pandas lets
+    Arrow (when the session enables it) ship it straight to the JVM; a
+    plain row list would start Python workers just to unpickle it. Object
+    columns keep NULL integer keys from turning into float NaN."""
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object), schema
+    )
+
+
+def _edge_probs(n_bins: int) -> np.ndarray:
+    """The reference's ``np.percentile(ref, linspace(0, 100, k+1))`` levels."""
+    return np.linspace(0.0, 1.0, n_bins + 1)
+
+
 def quantile_edges_selection(
     ref_df: DataFrame,
     column: str,
     n_bins: int,
     group_cols: Sequence[str] = (),
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
-    """Exact quantile edges with NO single-reducer percentile buffer.
+    """Exact equal-frequency edges (SURVEY A3) by distributed rank selection.
 
-    The sketch path (``profile.quantile_edges``) merges per-partition
-    (value, count) maps into ONE final reducer — fine while distinct values
-    are bounded, quadratic pain on continuous columns at 10^12 rows where
-    distinct ~ rows. This is the fully distributed alternative (classic
-    rank selection):
-
-      1. per-value counts (parallel combiner),
-      2. range-partitioned parallel prefix sums (``_cumulative_per_value``
-         — the same no-SinglePartition machinery as KS/W1),
-      3. each needed order statistic k (2 per quantile: floor/ceil of
-         h = p*(n-1)) finds its value via a broadcast range join
-         (cum - cnt <= k < cum) — positions are groups x 2(n_bins+1) rows,
-      4. driver-side linear interpolation over the collected picks
-         (``lo + (h - floor(h)) * (hi - lo)`` — the same naive lerp Spark's
-         percentile and DuckDB's quantile_cont use).
-
-    Output schema matches ``quantile_edges``:
-    (group_cols..., edges array<double>, ref_count, ref_distinct).
+    Per-value reference counts, parallel prefix sums
+    (``_cumulative_per_value``) and ``_rank_picks`` in one aggregation, then
+    the driver lerp — the plan PSI runs over the cap, so these are exactly
+    PSI's ``bin_edges``. Output: (group_cols..., edges array<double>,
+    ref_count, ref_distinct).
     """
-    from aumos_drift_detector_spark.operators.profile import clean_values
-
-    spark = ref_df.sparkSession
-    clean = clean_values(ref_df, column, group_cols)
-    per_value = clean.groupBy(*group_cols, "v").agg(F.count("v").alias("cnt"))
-    cum = _cumulative_per_value(per_value, group_cols, ["cnt"])
-    totals = per_value.groupBy(*group_cols).agg(
-        F.sum("cnt").alias("n"), F.count(F.lit(1)).alias("ref_distinct")
-    )
-    probs = [i / n_bins for i in range(n_bins + 1)]
-    nd = F.col("n").cast("double")
-    structs = []
-    for i, p in enumerate(probs):
-        h = F.lit(float(p)) * (nd - F.lit(1.0))
-        for side, k in (
-            (0, F.floor(h).cast("long")),
-            (1, F.least(F.floor(h).cast("long") + 1, F.col("n") - 1)),
-        ):
-            structs.append(
-                F.struct(
-                    F.lit(i).alias("pi"), k.alias("k"),
-                    h.alias("h"), F.lit(side).alias("side"),
-                )
-            )
-    pos = totals.select(
-        *group_cols, "n", "ref_distinct", F.explode(F.array(*structs)).alias("s")
-    ).select(
-        *group_cols, "n", "ref_distinct",
-        F.col("s.pi").alias("pi"), F.col("s.k").alias("k"),
-        F.col("s.h").alias("h"), F.col("s.side").alias("side"),
-    )
-    c, p_ = cum.alias("c"), F.broadcast(pos).alias("p")
-    cond = (F.col("p.k") >= F.col("c.cum_cnt") - F.col("c.cnt")) & (
-        F.col("p.k") < F.col("c.cum_cnt")
-    )
-    for g in group_cols:
-        cond = cond & (F.col(f"c.{g}") == F.col(f"p.{g}"))
-    picked = c.join(p_, cond, "inner").select(
-        *[F.col(f"p.{g}") for g in group_cols],
-        F.col("p.pi"), F.col("p.h"), F.col("p.side"),
-        F.col("p.n"), F.col("p.ref_distinct"), F.col("c.v"),
-    )
-    pdf = picked.toPandas()  # groups x 2(n_bins+1) rows — tiny
-
-    out_rows, key_iter = [], (
-        pdf[list(group_cols)].drop_duplicates().itertuples(index=False, name=None)
-        if group_cols
-        else ([()] if len(pdf) else [])
-    )
-    for key in key_iter:
-        sub = pdf
-        for g, kv in zip(group_cols, key):
-            sub = sub[sub[g] == kv]
-        edges = []
-        for i in range(len(probs)):
-            pp = sub[sub["pi"] == i]
-            lo = float(pp[pp["side"] == 0]["v"].iloc[0])
-            hi = float(pp[pp["side"] == 1]["v"].iloc[0])
-            h = float(pp["h"].iloc[0])
-            frac = float(h - np.floor(h))
-            edges.append(float(lo + frac * (hi - lo)))
-        out_rows.append(
-            (*key, edges, int(sub["n"].iloc[0]), int(sub["ref_distinct"].iloc[0]))
+    probs = _edge_probs(n_bins)
+    per_value = clean_values(ref_df, column, group_cols).groupBy(
+        *group_cols, "v"
+    ).agg(F.count("v").alias("c_ref"))
+    cum = _cumulative_per_value(per_value, group_cols, ["c_ref"])
+    rows = cum.groupBy(*group_cols).agg(
+        F.max("total_c_ref").alias("n"),
+        F.count(F.lit(1)).alias("ref_distinct"),
+        *_rank_picks(probs),
+    ).collect()
+    out_rows = [
+        (
+            *[r[g] for g in group_cols],
+            _picked_quantiles(r, probs, int(r["n"])).tolist(),
+            int(r["n"]),
+            int(r["ref_distinct"]),
         )
+        for r in rows
+        if r["n"]
+    ]
     schema = T.StructType(
         [ref_df.schema[g] for g in group_cols]
         + [
@@ -264,7 +313,7 @@ def quantile_edges_selection(
             T.StructField("ref_distinct", T.LongType()),
         ]
     )
-    return spark.createDataFrame(out_rows, schema)
+    return _driver_frame(ref_df.sparkSession, out_rows, schema)
 
 
 def _sides(
@@ -273,22 +322,59 @@ def _sides(
     column: str,
     group_cols: Sequence[str],
     cast_double: bool = True,
+    keep_nulls: bool = False,
 ) -> DataFrame:
-    """Union (ref, prod) into (group_cols..., side, v) with finite filtering."""
+    """Union (ref, prod) into (group_cols..., side, v).
+
+    Default: finite doubles only. ``cast_double=False`` keeps the native
+    type and drops NULLs (categorical values); ``keep_nulls=True`` casts to
+    double without filtering.
+    """
     def prep(df: DataFrame, side: int) -> DataFrame:
-        if cast_double:
-            return clean_values(df, column, group_cols).select(
-                *group_cols, F.lit(side).alias("side"), F.col("v")
+        if keep_nulls:
+            df = df.select(*group_cols, F.col(column).cast("double").alias("v"))
+        elif cast_double:
+            df = clean_values(df, column, group_cols)
+        else:
+            df = df.select(*group_cols, F.col(column).alias("v")).where(
+                F.col("v").isNotNull()
             )
-        return df.select(
-            *group_cols, F.lit(side).alias("side"), F.col(column).alias("v")
-        ).where(F.col("v").isNotNull())
+        return df.select(*group_cols, F.lit(side).alias("side"), F.col("v"))
 
     return prep(ref_df, _REF).unionByName(prep(prod_df, _PROD))
 
 
-def _group_key(row: pd.Series, group_cols: Sequence[str]):
-    return tuple(row[g] for g in group_cols)
+def per_value_sketch(
+    ref_df: DataFrame,
+    prod_df: DataFrame,
+    column: str,
+    group_cols: Sequence[str] = (),
+    keep_nulls: bool = False,
+    cast_double: bool = True,
+) -> DataFrame:
+    """One aggregation producing per-(group, distinct value) side counts.
+
+    The one sketch of this module: PSI, KS, W1, JS and Anderson-Darling are
+    all functions of the (v, c_ref, c_prod) rows, and chi² counts
+    categories with the same aggregation on the native type
+    (``cast_double=False``). Running tests off one sketch instead of one
+    scan each removes the repeated scans and driver/codegen latency — the
+    Amdahl term that capped end-to-end 8->32 scaling at 0.66 in round 1.
+    ``fused_tests_from_sketch`` collects the whole sketch, so it suits
+    bounded distinct-value sets (token counts, categorical ints); the
+    *_test_grouped operators switch to the distributed plan over the cap.
+
+    ``keep_nulls=True`` skips the finite filter so NULL values appear as one
+    ``v IS NULL`` row per group — letting ``profile_from_sketch`` compute
+    null fractions and total row counts from the SAME scan (intended for
+    integral columns, where null is the only non-finite state; drift kernels
+    drop the null rows driver-side).
+    """
+    sides = _sides(ref_df, prod_df, column, group_cols, cast_double, keep_nulls)
+    return sides.groupBy(*group_cols, "v").agg(
+        F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("c_ref"),
+        F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("c_prod"),
+    )
 
 
 def _verdict_frame(
@@ -323,6 +409,335 @@ def _verdict_frame(
 
 
 # ---------------------------------------------------------------------------
+# Sketch kernels: one group's sorted (v, c_ref, c_prod) -> (verdict, error)
+# ---------------------------------------------------------------------------
+
+_EMPTY_REF = "Reference dataset is empty after removing NaN/inf"
+_EMPTY_PROD = "Production dataset is empty after removing NaN/inf"
+_EMPTY_SIDE = "empty side after removing NaN/inf"
+
+
+def _side_error(
+    test: str, n_ref: int, n_prod: int, ref_distinct: int = 2
+) -> str | None:
+    """Each test's own error string for an empty side or a constant
+    reference; shared by the driver kernels and the over-cap plan."""
+    if test == "ks":
+        if n_ref == 0:
+            return "Reference dataset contains only NaN/inf values"
+        if n_prod == 0:
+            return "Production dataset contains only NaN/inf values"
+        return None
+    if test in ("w1", "ad"):
+        return _EMPTY_SIDE if n_ref == 0 or n_prod == 0 else None
+    if n_ref == 0:
+        return _EMPTY_REF
+    if test == "psi" and ref_distinct <= 1:
+        return "Reference distribution is constant — PSI requires variance"
+    return _EMPTY_PROD if n_prod == 0 else None
+
+
+def _psi_kernel(v, cr, cp, config: EngineConfig, column: str):
+    """PSI: exact weighted-percentile edges from the reference counts,
+    searchsorted binning against the ±inf-capped inner edges."""
+    ref_mask = cr > 0
+    err = _side_error("psi", int(cr.sum()), int(cp.sum()), int(ref_mask.sum()))
+    if err:
+        return None, err
+    n_bins = config.psi_bins
+    edges = _weighted_percentiles(v[ref_mask], cr[ref_mask], _edge_probs(n_bins))
+    bins = np.searchsorted(edges[1:-1], v, side="right")
+    rc = np.zeros(n_bins, dtype=np.int64)
+    pc = np.zeros(n_bins, dtype=np.int64)
+    np.add.at(rc, bins, cr)
+    np.add.at(pc, bins, cp)
+    return psi_from_counts(
+        rc, pc, config.psi_threshold, bin_edges=edges, feature_name=column
+    ), None
+
+
+def _ks_kernel(v, cr, cp, config: EngineConfig, column: str):
+    """Exact KS: D = max ECDF gap over the distinct union values."""
+    n_ref, n_prod = int(cr.sum()), int(cp.sum())
+    err = _side_error("ks", n_ref, n_prod)
+    if err:
+        return None, err
+    d = float(np.max(np.abs(np.cumsum(cr) / n_ref - np.cumsum(cp) / n_prod)))
+    return ks_verdict(
+        d, n_ref, n_prod, config.ks_threshold, column,
+        method=config.ks_pvalue_method,
+    ), None
+
+
+def _w1_verdict(
+    w1: float, n_ref: int, n_prod: int, quartiles: np.ndarray, std: float,
+    threshold: float, column: str,
+) -> DriftVerdict:
+    """IQR / population-std / 1.0 normalization ladder (wasserstein.py:52-56)."""
+    iqr = float(quartiles[1] - quartiles[0])
+    if iqr < 1e-10:
+        iqr = std or 1.0
+    score = w1 / iqr
+    return DriftVerdict(
+        test="wasserstein",
+        score=score,
+        threshold=threshold,
+        is_drifted=bool(score > threshold),
+        reference_size=n_ref,
+        production_size=n_prod,
+        feature_name=column,
+        details={"raw_distance": w1, "iqr": iqr},
+    )
+
+
+_W1_QUARTILES = np.array([0.25, 0.75])
+
+
+def _w1_kernel(v, cr, cp, config: EngineConfig, column: str):
+    """IQR-normalized W1 = Σ |F_ref − F_prod|·Δv over the sorted distinct
+    union values (scipy.stats.wasserstein_distance, wasserstein.py:20-75)."""
+    n_ref, n_prod = int(cr.sum()), int(cp.sum())
+    err = _side_error("w1", n_ref, n_prod)
+    if err:
+        return None, err
+    gap = np.abs(np.cumsum(cr) / n_ref - np.cumsum(cp) / n_prod)[:-1]
+    w1 = float(np.sum(gap * np.diff(v)))
+    m = cr > 0
+    mean = float(np.sum(v[m] * cr[m])) / n_ref
+    std = float(np.sqrt(np.sum(cr[m] * (v[m] - mean) ** 2) / n_ref))
+    quartiles = _weighted_percentiles(v[m], cr[m], _W1_QUARTILES)
+    return _w1_verdict(
+        w1, n_ref, n_prod, quartiles, std, config.wasserstein_threshold, column
+    ), None
+
+
+def _js_kernel(v, cr, cp, config: EngineConfig, column: str):
+    """JS over equal-width bins of the shared range (js_test_grouped parity)."""
+    err = _side_error("js", int(cr.sum()), int(cp.sum()))
+    if err:
+        return None, err
+    n_bins = config.hist_bins
+    lo, hi = float(v[0]), float(v[-1])
+    if hi == lo:
+        bins = np.zeros(len(v), dtype=np.int64)
+    else:
+        width = (hi - lo) / n_bins
+        bins = np.minimum(np.floor((v - lo) / width).astype(np.int64), n_bins - 1)
+        bins[v == hi] = n_bins - 1
+    rc = np.zeros(n_bins, dtype=np.int64)
+    pc = np.zeros(n_bins, dtype=np.int64)
+    np.add.at(rc, bins, cr)
+    np.add.at(pc, bins, cp)
+    return js_from_counts(rc, pc, config.js_threshold, feature_name=column), None
+
+
+_KERNELS = {"psi": _psi_kernel, "ks": _ks_kernel, "w1": _w1_kernel, "js": _js_kernel}
+
+
+# ---------------------------------------------------------------------------
+# The front door: one sketch, then one collect or one distributed ECDF
+# ---------------------------------------------------------------------------
+
+def _verdicts_from_sketch(
+    sketch_pdf: pd.DataFrame,
+    group_cols: Sequence[str],
+    column: str,
+    config: EngineConfig,
+    tests: Sequence[str],
+) -> dict[str, pd.DataFrame]:
+    """Under the cap: every kernel in ``tests`` over one collected sketch,
+    in one hash-groupby pass — O(sketch_rows), not O(groups x sketch_rows).
+    An ungrouped run with no clean rows still yields one error row."""
+    # a keep_nulls sketch carries (v IS NULL) rows for profile_from_sketch;
+    # the drift kernels operate on clean values only (parity with _sides)
+    sketch_pdf = sketch_pdf[sketch_pdf["v"].notna()]
+    groups = _iter_group_subframes(sketch_pdf, group_cols)
+    if not group_cols and sketch_pdf.empty:
+        groups = [((), sketch_pdf)]
+    out: dict[str, list] = {t: [] for t in tests}
+    for key, sub in groups:
+        sub = sub.sort_values("v")
+        v = sub["v"].to_numpy(dtype=np.float64)
+        cr = sub["c_ref"].to_numpy(dtype=np.int64)
+        cp = sub["c_prod"].to_numpy(dtype=np.int64)
+        for t in tests:
+            out[t].append((key, *_KERNELS[t](v, cr, cp, config, column)))
+    return {t: _verdict_frame(out[t], group_cols) for t in tests}
+
+
+# Per-group statistics of the over-cap plan, as SQL over the
+# ``_cumulative_per_value`` columns (one Py4J call per aggregate instead of
+# one per Column operator), keyed by the test that needs them. The
+# Anderson-Darling terms are the midrank sums of Scholz-Stephens A2akN.
+_GAP = "abs(try_divide(cum_c_ref, total_c_ref) - try_divide(cum_c_prod, total_c_prod))"
+_AD_LJ = "(c_ref + c_prod)"
+_AD_BJ = f"(cum_c_ref + cum_c_prod - {_AD_LJ} / 2.0D)"
+_AD_N = "(total_c_ref + total_c_prod)"
+_AD_DENOM = f"({_AD_BJ} * ({_AD_N} - {_AD_BJ}) - {_AD_N} * {_AD_LJ} / 4.0D)"
+
+
+def _ad_sum(side: str) -> str:
+    inner = (
+        f"{_AD_LJ} * power({_AD_N} * (cum_c_{side} - c_{side} / 2.0D)"
+        f" - total_c_{side} * {_AD_BJ}, 2)"
+    )
+    return f"sum(CASE WHEN {_AD_DENOM} > 0 THEN try_divide({inner}, {_AD_DENOM}) END)"
+
+
+_OVERCAP_AGGS = {
+    "psi": {},
+    "ks": {"d": f"max({_GAP})"},
+    "w1": {
+        "w1": f"sum({_GAP} * coalesce(next_v - v, 0.0D))",
+        "ref_ss": "sum(c_ref * power(v - try_divide(total_ref_mass, total_c_ref), 2))",
+    },
+    "ad": {"s_ref": _ad_sum("ref"), "s_prod": _ad_sum("prod")},
+}
+
+
+def _overcap_verdicts(
+    sketch: DataFrame,
+    group_cols: Sequence[str],
+    column: str,
+    config: EngineConfig,
+    tests: Sequence[str],
+    ad_threshold: float = 0.05,
+) -> dict[str, pd.DataFrame]:
+    """Over the cap: the same statistics from ONE distributed ECDF.
+
+    One ``_cumulative_per_value`` frame over the (persisted) sketch feeds one
+    grouped aggregation: KS D, the W1 integral, the reference sums behind
+    the W1 std fallback, the Anderson-Darling sums, and ``_rank_picks`` for
+    the W1 quartiles and the PSI edges. PSI then bins the sketch rows (not
+    the raw rows) against those edges. No stage reads raw rows again and
+    none funnels a group through one reducer; the driver finalizes on
+    groups x O(bins) values with the kernels' own formulas.
+    """
+    psi_probs = _edge_probs(config.psi_bins) if "psi" in tests else np.empty(0)
+    probs = np.concatenate(
+        [psi_probs, _W1_QUARTILES if "w1" in tests else np.empty(0)]
+    )
+    w1 = "w1" in tests  # the W1 integral needs next_v, its std the ref mass
+    cum = _cumulative_per_value(
+        sketch.withColumn("ref_mass", F.col("c_ref") * F.col("v")) if w1 else sketch,
+        group_cols,
+        ["c_ref", "c_prod", "ref_mass"] if w1 else ["c_ref", "c_prod"],
+        with_next_value=w1,
+    )
+    aggs = {
+        "n_ref": "max(total_c_ref)",
+        "n_prod": "max(total_c_prod)",
+        "ref_distinct": "count_if(c_ref > 0)",
+    }
+    for t in tests:
+        aggs.update(_OVERCAP_AGGS[t])
+    rows = cum.groupBy(*group_cols).agg(
+        *[F.expr(sql).alias(name) for name, sql in aggs.items()],
+        *_rank_picks(probs),
+    ).collect()
+
+    out: dict[str, list] = {t: [] for t in tests}
+    psi_rows: list[tuple[int, tuple, np.ndarray]] = []
+    for r in rows:
+        key = tuple(r[g] for g in group_cols)
+        n, m = int(r["n_ref"] or 0), int(r["n_prod"] or 0)
+        q = _picked_quantiles(r, probs, n) if n else None
+        for t in tests:
+            err = _side_error(t, n, m, r["ref_distinct"])
+            verdict = None
+            if err:
+                pass
+            elif t == "ks":
+                verdict = ks_verdict(
+                    float(r["d"]), n, m, config.ks_threshold, column,
+                    method=config.ks_pvalue_method,
+                )
+            elif t == "w1":
+                verdict = _w1_verdict(
+                    float(r["w1"]), n, m, q[psi_probs.size:],
+                    float(np.sqrt(r["ref_ss"] / n)),
+                    config.wasserstein_threshold, column,
+                )
+            elif t == "ad":
+                verdict = _ad_verdict(
+                    float(r["s_ref"]), float(r["s_prod"]), n, m, ad_threshold, column
+                )
+            else:  # psi: the verdict waits for the binning pass below
+                psi_rows.append((len(out[t]), key, q[:psi_probs.size]))
+            out[t].append((key, verdict, err))
+    if psi_rows:
+        counts = _psi_bin_counts(sketch, group_cols, psi_rows, config.psi_bins)
+        for (i, key, edges), (rc, pc) in zip(psi_rows, counts):
+            out["psi"][i] = (key, psi_from_counts(
+                rc, pc, config.psi_threshold, bin_edges=edges, feature_name=column
+            ), None)
+    return {t: _verdict_frame(out[t], group_cols) for t in tests}
+
+
+def _psi_bin_counts(
+    sketch: DataFrame,
+    group_cols: Sequence[str],
+    psi_rows: list[tuple[int, tuple, np.ndarray]],
+    n_bins: int,
+) -> list[tuple[np.ndarray, np.ndarray]]:
+    """Per-bin (ref, prod) counts of the sketch rows against each group's
+    broadcast inner edges (``bucket_by_edges`` = searchsorted 'right')."""
+    schema = T.StructType(
+        [T.StructField(g, sketch.schema[g].dataType) for g in group_cols]
+        + [
+            T.StructField("_gi", T.IntegerType()),
+            T.StructField("inner_edges", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    edges_df = _driver_frame(
+        sketch.sparkSession,
+        [(*key, gi, edges[1:-1].tolist()) for gi, (_, key, edges) in enumerate(psi_rows)],
+        schema,
+    )
+    binned = _join_on(sketch, edges_df, group_cols).groupBy(
+        "_gi", bucket_by_edges(F.col("v"), F.col("inner_edges")).alias("bin")
+    ).agg(F.sum("c_ref").alias("rc"), F.sum("c_prod").alias("pc"))
+    counts = [
+        (np.zeros(n_bins, dtype=np.int64), np.zeros(n_bins, dtype=np.int64))
+        for _ in psi_rows
+    ]
+    for r in binned.collect():
+        rc, pc = counts[r["_gi"]]
+        rc[r["bin"]] += r["rc"]
+        pc[r["bin"]] += r["pc"]
+    return counts
+
+
+def _sketch_tests(
+    ref_df: DataFrame,
+    prod_df: DataFrame,
+    column: str,
+    group_cols: Sequence[str],
+    config: EngineConfig,
+    tests: Sequence[str],
+    ad_threshold: float = 0.05,
+) -> dict[str, pd.DataFrame]:
+    """The front door of the sketch tests: build the sketch once, then run
+    ``tests`` by the collect plan or the over-cap plan."""
+    per_value = per_value_sketch(ref_df, prod_df, column, group_cols)
+    pdf, persisted = _materialize_sketch(per_value, config.sketch_collect_max_rows)
+    if pdf is not None:
+        return _verdicts_from_sketch(pdf, group_cols, column, config, tests)
+    try:
+        return _overcap_verdicts(
+            persisted, group_cols, column, config, tests, ad_threshold
+        )
+    finally:
+        persisted.unpersist()
+
+
+def _with_overrides(config: EngineConfig, **overrides) -> EngineConfig:
+    """``config`` with the call's explicit (non-None) arguments applied."""
+    set_ = {k: v for k, v in overrides.items() if v is not None}
+    return replace(config, **set_) if set_ else config
+
+
+# ---------------------------------------------------------------------------
 # PSI
 # ---------------------------------------------------------------------------
 
@@ -335,177 +750,12 @@ def psi_test_grouped(
     n_bins: int | None = None,
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> pd.DataFrame:
-    """PSI per group: ref-quantile bins (±inf caps) -> histogram both sides.
-
-    Two distributed passes (psi.py:154-162 protocol):
-      1. exact/approx quantile edges + distinct count from the reference side
-      2. bucket both sides against broadcast edges, groupBy(group, side, bin)
-    Finalization on (groups x 2 x n_bins) counts driver-side.
-    """
-    threshold = config.psi_threshold if threshold is None else threshold
-    n_bins = config.psi_bins if n_bins is None else n_bins
-
-    # Adaptive plan (same probe as KS/W1): PSI standalone normally pays TWO
-    # distributed passes (quantile edges, then histogram-vs-edges); when the
-    # per-value sketch fits the collect cap, ONE job + the fused-path driver
-    # kernel (exact weighted-percentile edges + searchsorted binning —
-    # Spark-percentile parity verified bitwise on the sketch) replaces both.
-    # Deliberate: this path ignores config.approx / exact_quantile_plan —
-    # under the cap the sketch holds the full distribution, so exact edges
-    # are free and the approx knob would only DEGRADE the result at equal
-    # cost. An approx=True config therefore silently upgrades to exact
-    # whenever the column's distinct count fits the cap; above the cap the
-    # distributed fallback below honors the knobs as configured.
-    cap = config.sketch_collect_max_rows
-    if cap:
-        sides = _sides(ref_df, prod_df, column, group_cols)
-        per_value = sides.groupBy(*group_cols, "v").agg(
-            F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("c_prod"),
-        )
-        pdf_sketch, persisted = _materialize_sketch(per_value, cap)
-        if pdf_sketch is not None:
-            return _verdict_frame(
-                _psi_verdicts_from_sketch(
-                    pdf_sketch, group_cols, column, threshold, n_bins
-                ),
-                group_cols,
-            )
-        # overflow: the two-pass fallback below re-derives edges from the
-        # raw reference side (it never consumes the per-value sketch), so
-        # release the probe's cache rather than pin it for nothing
-        persisted.unpersist()
-
-    edges = (
-        quantile_edges_selection(ref_df, column, n_bins, group_cols, config)
-        if (not config.approx and config.exact_quantile_plan == "selection")
-        else quantile_edges(ref_df, column, n_bins, group_cols, config)
-    )
-    # inner edges drop the 0% and 100% quantiles (±inf caps replace them)
-    edges = edges.select(
-        *group_cols,
-        F.slice(F.col("edges"), 2, n_bins - 1).alias("inner_edges"),
-        F.col("edges"),
-        "ref_distinct",
-    )
-    sides = _sides(ref_df, prod_df, column, group_cols)
-    # LEFT join: a group with production data but no reference rows keeps
-    # its side rows with NULL edges, so it gets an error verdict below
-    # instead of silently vanishing from the frame (an orphan partition
-    # absent from the baseline is exactly the thing to report)
-    joined = (
-        sides.join(F.broadcast(edges), list(group_cols), "left")
-        if group_cols
-        else sides.crossJoin(F.broadcast(edges))
-    )
-    counts = (
-        joined.withColumn("bin", bucket_by_edges(F.col("v"), F.col("inner_edges")))
-        .groupBy(*group_cols, "side", "bin")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.first("edges").alias("edges"),
-            F.first("ref_distinct").alias("ref_distinct"),
-        )
-    )
-    pdf = counts.toPandas()
-
-    verdicts = []
-    if not group_cols and pdf.empty:
-        verdicts.append(((), None, "no data"))
-    for key, sub in _iter_group_subframes(pdf, group_cols):
-        if sub["edges"].iloc[0] is None or (
-            isinstance(sub["ref_distinct"].iloc[0], float)
-            and np.isnan(sub["ref_distinct"].iloc[0])
-        ):
-            verdicts.append(
-                (key, None, "Reference dataset is empty after removing NaN/inf")
-            )
-            continue
-        if int(sub["ref_distinct"].iloc[0]) <= 1:
-            verdicts.append(
-                (key, None, "Reference distribution is constant — PSI requires variance")
-            )
-            continue
-        rc = np.zeros(n_bins, dtype=np.int64)
-        pc = np.zeros(n_bins, dtype=np.int64)
-        bins = sub["bin"].to_numpy(dtype=np.int64)
-        cnts = sub["cnt"].to_numpy(dtype=np.int64)
-        is_ref = (sub["side"] == _REF).to_numpy()
-        np.add.at(rc, bins[is_ref], cnts[is_ref])
-        np.add.at(pc, bins[~is_ref], cnts[~is_ref])
-        if rc.sum() == 0:
-            verdicts.append((key, None, "Reference dataset is empty after removing NaN/inf"))
-            continue
-        if pc.sum() == 0:
-            verdicts.append((key, None, "Production dataset is empty after removing NaN/inf"))
-            continue
-        edges_arr = sub["edges"].iloc[0]
-        v = psi_from_counts(rc, pc, threshold, bin_edges=edges_arr, feature_name=column)
-        verdicts.append((key, v, None))
-    return _verdict_frame(verdicts, group_cols)
-
-
-def _psi_kernel(
-    v: np.ndarray,
-    cr: np.ndarray,
-    cp: np.ndarray,
-    n_bins: int,
-    threshold: float,
-    column: str,
-) -> tuple[DriftVerdict | None, str | None]:
-    """PSI from one group's sorted per-value sketch: exact weighted-percentile
-    edges from the reference counts (Spark `percentile` parity — verified
-    bitwise over (value, count) sketches), searchsorted binning, then the
-    same ``psi_from_counts`` finalize as the distributed two-pass plan.
-    Shared by ``fused_tests_from_sketch`` and the adaptive
-    ``psi_test_grouped`` fast path."""
-    n_ref, n_prod = int(cr.sum()), int(cp.sum())
-    if n_ref == 0:
-        return None, "Reference dataset is empty after removing NaN/inf"
-    ref_mask = cr > 0
-    if int(ref_mask.sum()) <= 1:
-        return None, "Reference distribution is constant — PSI requires variance"
-    if n_prod == 0:
-        return None, "Production dataset is empty after removing NaN/inf"
-    probs = np.linspace(0.0, 1.0, n_bins + 1)
-    edges = _weighted_percentiles(v[ref_mask], cr[ref_mask], probs)
-    inner = edges[1:-1]
-    bins = np.searchsorted(inner, v, side="right")
-    rc = np.zeros(n_bins, dtype=np.int64)
-    pc = np.zeros(n_bins, dtype=np.int64)
-    np.add.at(rc, bins, cr)
-    np.add.at(pc, bins, cp)
-    return (
-        psi_from_counts(
-            rc, pc, threshold, bin_edges=edges, feature_name=column
-        ),
-        None,
-    )
-
-
-def _psi_verdicts_from_sketch(
-    sketch_pdf: pd.DataFrame,
-    group_cols: Sequence[str],
-    column: str,
-    threshold: float,
-    n_bins: int,
-) -> list[tuple[tuple, DriftVerdict | None, str | None]]:
-    """Per-group ``_psi_kernel`` over a collected per-value sketch
-    (one hash-groupby pass — O(sketch_rows), not O(groups x sketch_rows))."""
-    sketch_pdf = sketch_pdf[sketch_pdf["v"].notna()]
-    verdicts: list[tuple[tuple, DriftVerdict | None, str | None]] = []
-    for key, sub in _iter_group_subframes(sketch_pdf, group_cols):
-        sub = sub.sort_values("v")
-        v = sub["v"].to_numpy(dtype=np.float64)
-        cr = sub["c_ref"].to_numpy(dtype=np.int64)
-        cp = sub["c_prod"].to_numpy(dtype=np.int64)
-        verdict, err = _psi_kernel(v, cr, cp, n_bins, threshold, column)
-        verdicts.append((key, verdict, err))
-    if not verdicts and not group_cols:
-        verdicts.append(
-            ((), None, "Reference dataset is empty after removing NaN/inf")
-        )
-    return verdicts
+    """PSI per group: exact reference-quantile bins (±inf caps), both sides
+    histogrammed against them (psi.py:154-162). A group with production
+    rows but no reference rows — an orphan partition absent from the
+    baseline — gets an error row rather than vanishing."""
+    config = _with_overrides(config, psi_threshold=threshold, psi_bins=n_bins)
+    return _sketch_tests(ref_df, prod_df, column, group_cols, config, ("psi",))["psi"]
 
 
 def psi_test(
@@ -518,7 +768,6 @@ def psi_test(
 ) -> DriftVerdict:
     """Single-pair PSI with the reference's ValueError semantics (psi.py:145-152)."""
     threshold = config.psi_threshold if threshold is None else threshold
-    n_bins = config.psi_bins if n_bins is None else n_bins
     frame = psi_test_grouped(ref_df, prod_df, column, (), threshold, n_bins, config)
     return _single(frame, "psi", threshold, column)
 
@@ -526,51 +775,6 @@ def psi_test(
 # ---------------------------------------------------------------------------
 # KS
 # ---------------------------------------------------------------------------
-
-def _ks_verdicts_from_sketch(
-    sketch_pdf: pd.DataFrame,
-    group_cols: Sequence[str],
-    column: str,
-    threshold: float,
-    config: EngineConfig,
-) -> list[tuple[tuple, DriftVerdict | None, str | None]]:
-    """Per-group exact KS (D = max ECDF gap) over a collected per-value
-    sketch — the driver half of the adaptive plan in ``ks_test_grouped``;
-    identical math to the fused-sketch KS path. One hash-groupby pass —
-    O(sketch_rows), not O(groups x sketch_rows)."""
-    sketch_pdf = sketch_pdf[sketch_pdf["v"].notna()]
-    verdicts: list[tuple[tuple, DriftVerdict | None, str | None]] = []
-    for key, sub in _iter_group_subframes(sketch_pdf, group_cols):
-        sub = sub.sort_values("v")
-        cr = sub["c_ref"].to_numpy(dtype=np.int64)
-        cp = sub["c_prod"].to_numpy(dtype=np.int64)
-        n_ref, n_prod = int(cr.sum()), int(cp.sum())
-        if n_ref == 0:
-            verdicts.append(
-                (key, None, "Reference dataset contains only NaN/inf values")
-            )
-        elif n_prod == 0:
-            verdicts.append(
-                (key, None, "Production dataset contains only NaN/inf values")
-            )
-        else:
-            d = float(
-                np.max(np.abs(np.cumsum(cr) / n_ref - np.cumsum(cp) / n_prod))
-            )
-            verdicts.append(
-                (
-                    key,
-                    ks_verdict(d, n_ref, n_prod, threshold, column,
-                               method=config.ks_pvalue_method),
-                    None,
-                )
-            )
-    if not verdicts and not group_cols:
-        verdicts.append(
-            ((), None, "Reference dataset contains only NaN/inf values")
-        )
-    return verdicts
-
 
 def ks_test_grouped(
     ref_df: DataFrame,
@@ -580,70 +784,10 @@ def ks_test_grouped(
     threshold: float | None = None,
     config: EngineConfig = DEFAULT_CONFIG,
 ) -> pd.DataFrame:
-    """Exact distributed KS statistic per group.
-
-    Pre-aggregates to per-(group, distinct value) counts, then the
-    range-partitioned two-pass prefix sum (``_cumulative_per_value``) builds
-    both ECDFs with every stage fully parallel — no single-reducer window
-    sort; D = max |F_ref - F_prod|.
-    """
-    threshold = config.ks_threshold if threshold is None else threshold
-    sides = _sides(ref_df, prod_df, column, group_cols)
-    per_value = sides.groupBy(*group_cols, "v").agg(
-        F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("c_prod"),
-    )
-    # Adaptive plan (same probe as wasserstein_test_grouped): one job +
-    # driver ECDF sweep when the distinct-value set fits the cap; on
-    # overflow the fully distributed prefix-sum plan reuses the persisted
-    # sketch (its 3 consumers would otherwise each recompute the
-    # corpus-scale aggregation).
-    cap = config.sketch_collect_max_rows
-    persisted = None
-    if cap:
-        pdf_sketch, persisted = _materialize_sketch(per_value, cap)
-        if pdf_sketch is not None:
-            return _verdict_frame(
-                _ks_verdicts_from_sketch(
-                    pdf_sketch, group_cols, column, threshold, config
-                ),
-                group_cols,
-            )
-        per_value = persisted
-    try:
-        cum = _cumulative_per_value(per_value, group_cols, ["c_ref", "c_prod"])
-        stats = cum.groupBy(*group_cols).agg(
-            F.max("total_c_ref").alias("n_ref"),
-            F.max("total_c_prod").alias("n_prod"),
-            F.max(
-                F.abs(
-                    F.try_divide(F.col("cum_c_ref"), F.col("total_c_ref"))
-                    - F.try_divide(F.col("cum_c_prod"), F.col("total_c_prod"))
-                )
-            ).alias("d"),
-        )
-        pdf = stats.toPandas()
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-    verdicts = []
-    for _, r in pdf.iterrows():
-        key = tuple(r[g] for g in group_cols)
-        n, m = int(r["n_ref"] or 0), int(r["n_prod"] or 0)
-        if n == 0:
-            verdicts.append((key, None, "Reference dataset contains only NaN/inf values"))
-        elif m == 0:
-            verdicts.append((key, None, "Production dataset contains only NaN/inf values"))
-        else:
-            verdicts.append((
-                key,
-                ks_verdict(float(r["d"]), n, m, threshold, column,
-                           method=config.ks_pvalue_method),
-                None,
-            ))
-    if not pdf.shape[0] and not group_cols:
-        verdicts.append(((), None, "Reference dataset contains only NaN/inf values"))
-    return _verdict_frame(verdicts, group_cols)
+    """Exact two-sample KS per group: D = max |F_ref − F_prod| over both
+    ECDFs built from the per-value sketch (never a single-reducer sort)."""
+    config = _with_overrides(config, ks_threshold=threshold)
+    return _sketch_tests(ref_df, prod_df, column, group_cols, config, ("ks",))["ks"]
 
 
 def ks_test(
@@ -835,13 +979,13 @@ def _kernel_over_binned_counts(
         np.add.at(rc, bins[is_ref], cnts[is_ref])
         np.add.at(pc, bins[~is_ref], cnts[~is_ref])
         if rc.sum() == 0:
-            verdicts.append((key, None, "Reference dataset is empty after removing NaN/inf"))
+            verdicts.append((key, None, _EMPTY_REF))
         elif pc.sum() == 0:
-            verdicts.append((key, None, "Production dataset is empty after removing NaN/inf"))
+            verdicts.append((key, None, _EMPTY_PROD))
         else:
             verdicts.append((key, kernel(rc, pc, threshold, feature_name=column), None))
     if not verdicts and not group_cols:
-        verdicts.append(((), None, "Reference dataset is empty after removing NaN/inf"))
+        verdicts.append(((), None, _EMPTY_REF))
     return _verdict_frame(verdicts, group_cols)
 
 
@@ -921,77 +1065,6 @@ def hellinger_test(ref_df, prod_df, column, threshold=None, n_bins=None,
 # Wasserstein-1
 # ---------------------------------------------------------------------------
 
-def _w1_kernel(
-    v: np.ndarray,
-    cr: np.ndarray,
-    cp: np.ndarray,
-    threshold: float,
-    column: str,
-) -> tuple[DriftVerdict | None, str | None]:
-    """IQR-normalized W1 from one group's sorted (value, c_ref, c_prod) rows.
-
-    Same math as the distributed plan (CDF-gap integral over sorted distinct
-    union values, wasserstein.py:20-75 semantics): W1 = Σ |F_ref − F_prod|·Δv;
-    IQR / population-std / 1.0 normalization ladder from the SAME sketch
-    (exact weighted percentiles — Spark `percentile` parity ≤ 1 ulp).
-    """
-    n_ref, n_prod = int(cr.sum()), int(cp.sum())
-    if n_ref == 0 or n_prod == 0:
-        return None, "empty side after removing NaN/inf"
-    if len(v) > 1:
-        gap = np.abs(np.cumsum(cr) / n_ref - np.cumsum(cp) / n_prod)[:-1]
-        w1 = float(np.sum(gap * np.diff(v)))
-    else:
-        w1 = 0.0
-    ref_mask = cr > 0
-    q = _weighted_percentiles(
-        v[ref_mask], cr[ref_mask], np.array([0.25, 0.75])
-    )
-    iqr = float(q[1] - q[0])
-    if iqr < 1e-10:
-        mean = float(np.sum(v[ref_mask] * cr[ref_mask])) / n_ref
-        std = float(
-            np.sqrt(np.sum(cr[ref_mask] * (v[ref_mask] - mean) ** 2) / n_ref)
-        )
-        iqr = std or 1.0
-    score = w1 / iqr
-    return (
-        DriftVerdict(
-            test="wasserstein",
-            score=score,
-            threshold=threshold,
-            is_drifted=bool(score > threshold),
-            reference_size=n_ref,
-            production_size=n_prod,
-            feature_name=column,
-            details={"raw_distance": w1, "iqr": iqr},
-        ),
-        None,
-    )
-
-
-def _w1_verdicts_from_sketch(
-    sketch_pdf: pd.DataFrame,
-    group_cols: Sequence[str],
-    column: str,
-    threshold: float,
-) -> list[tuple[tuple, DriftVerdict | None, str | None]]:
-    """Per-group `_w1_kernel` over a collected per-value sketch (one
-    hash-groupby pass — O(sketch_rows), not O(groups x sketch_rows))."""
-    sketch_pdf = sketch_pdf[sketch_pdf["v"].notna()]
-    verdicts: list[tuple[tuple, DriftVerdict | None, str | None]] = []
-    for key, sub in _iter_group_subframes(sketch_pdf, group_cols):
-        sub = sub.sort_values("v")
-        v = sub["v"].to_numpy(dtype=np.float64)
-        cr = sub["c_ref"].to_numpy(dtype=np.int64)
-        cp = sub["c_prod"].to_numpy(dtype=np.int64)
-        verdict, err = _w1_kernel(v, cr, cp, threshold, column)
-        verdicts.append((key, verdict, err))
-    if not verdicts and not group_cols:
-        verdicts.append(((), None, "empty side after removing NaN/inf"))
-    return verdicts
-
-
 def wasserstein_test_grouped(
     ref_df: DataFrame,
     prod_df: DataFrame,
@@ -1003,95 +1076,12 @@ def wasserstein_test_grouped(
     """IQR-normalized W1 per group, computed as the exact CDF-gap integral.
 
     W1 = Σ_i |F_ref(v_i) − F_prod(v_i)| · (v_{i+1} − v_i) over sorted distinct
-    union values — identical to scipy.stats.wasserstein_distance. Same
-    pre-aggregate + parallel prefix-sum structure as KS (``next_v`` stitches
-    the CDF-gap widths across range-chunk boundaries); the IQR (fallback
-    population std, fallback 1.0 — wasserstein.py:52-56) fuses into the same job.
+    union values — identical to scipy.stats.wasserstein_distance — divided by
+    the reference IQR (fallback population std, fallback 1.0 —
+    wasserstein.py:52-56), all from the same per-value sketch.
     """
-    threshold = config.wasserstein_threshold if threshold is None else threshold
-    sides = _sides(ref_df, prod_df, column, group_cols)
-    per_value = sides.groupBy(*group_cols, "v").agg(
-        F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("c_prod"),
-    )
-    # Adaptive plan: ONE job (sketch -> bounded collect -> numpy kernel,
-    # IQR/std fused from the same sketch) when the distinct-value set fits
-    # the probe cap — the common case, and 3 fewer Spark jobs than the
-    # distributed path (no approxQuantile pass, no chunk windows, no
-    # percentile aggregation). A cap overflow means distinct ~ rows
-    # (continuous column at scale): fall through to the prefix-sum plan,
-    # whose every stage stays parallel, paying the probe as one extra
-    # aggregation pass only in that case.
-    cap = config.sketch_collect_max_rows
-    persisted = None
-    if cap:
-        pdf_sketch, persisted = _materialize_sketch(per_value, cap)
-        if pdf_sketch is not None:
-            verdicts = _w1_verdicts_from_sketch(
-                pdf_sketch, group_cols, column, threshold
-            )
-            return _verdict_frame(verdicts, group_cols)
-        per_value = persisted
-    try:
-        cum = _cumulative_per_value(
-            per_value, group_cols, ["c_ref", "c_prod"], with_next_value=True
-        )
-        dist = cum.groupBy(*group_cols).agg(
-            F.sum(
-                F.abs(
-                    F.try_divide(F.col("cum_c_ref"), F.col("total_c_ref"))
-                    - F.try_divide(F.col("cum_c_prod"), F.col("total_c_prod"))
-                )
-                * F.coalesce(F.col("next_v") - F.col("v"), F.lit(0.0))
-            ).alias("w1"),
-            F.max("total_c_ref").alias("n_ref"),
-            F.max("total_c_prod").alias("n_prod"),
-        )
-        # reference-side IQR + population std for normalization
-        refstats = clean_values(ref_df, column, group_cols)
-        iqr_agg = refstats.groupBy(*group_cols).agg(
-            F.percentile(F.col("v"), F.array(F.lit(0.25), F.lit(0.75))).alias("q"),
-            F.stddev_pop("v").alias("std"),
-        )
-        joined = (
-            dist.join(iqr_agg, list(group_cols), "left") if group_cols
-            else dist.crossJoin(iqr_agg)
-        )
-        pdf = joined.toPandas()
-    finally:
-        if persisted is not None:
-            persisted.unpersist()
-    verdicts = []
-    for _, r in pdf.iterrows():
-        key = tuple(r[g] for g in group_cols)
-        n, m = int(r["n_ref"] or 0), int(r["n_prod"] or 0)
-        if n == 0 or m == 0:
-            verdicts.append((key, None, "empty side after removing NaN/inf"))
-            continue
-        q = r["q"]
-        iqr = float(q[1] - q[0]) if q is not None else 0.0
-        if iqr < 1e-10:
-            iqr = float(r["std"] or 0.0) or 1.0
-        score = float(r["w1"]) / iqr
-        verdicts.append(
-            (
-                key,
-                DriftVerdict(
-                    test="wasserstein",
-                    score=score,
-                    threshold=threshold,
-                    is_drifted=bool(score > threshold),
-                    reference_size=n,
-                    production_size=m,
-                    feature_name=column,
-                    details={"raw_distance": float(r["w1"]), "iqr": iqr},
-                ),
-                None,
-            )
-        )
-    if not verdicts and not group_cols:
-        verdicts.append(((), None, "empty side after removing NaN/inf"))
-    return _verdict_frame(verdicts, group_cols)
+    config = _with_overrides(config, wasserstein_threshold=threshold)
+    return _sketch_tests(ref_df, prod_df, column, group_cols, config, ("w1",))["w1"]
 
 
 def wasserstein_test(ref_df, prod_df, column, threshold=None,
@@ -1298,13 +1288,11 @@ def chi2_test_grouped(
     """
     threshold = config.chi2_threshold if threshold is None else threshold
     cap = config.chi2_max_categories
-    sides = _sides(ref_df, prod_df, column, group_cols, cast_double=False)
     # group on the NATIVE type — string hash-aggregation is ~15x slower on
     # wide explode inputs; stringify categories in the tiny finalize instead
     # (the reference's str coercion, chi_squared.py:194, applied post-agg)
-    per_cat = sides.groupBy(*group_cols, "v").agg(
-        F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("c_prod"),
+    per_cat = per_value_sketch(
+        ref_df, prod_df, column, group_cols, cast_double=False
     )
     # Adaptive phase 2: collect the bounded phase-1 fold and rank in the
     # driver (one Spark job, ranked subtree consumed once) unless the fold
@@ -1361,63 +1349,8 @@ def chi2_test(ref_df, prod_df, column, threshold=None,
 
 
 # ---------------------------------------------------------------------------
-# Fused per-value-sketch path: ONE distributed pass feeds PSI + KS + JS
+# Fused per-value-sketch path: ONE distributed pass feeds PSI + KS + JS + W1
 # ---------------------------------------------------------------------------
-
-def per_value_sketch(
-    ref_df: DataFrame,
-    prod_df: DataFrame,
-    column: str,
-    group_cols: Sequence[str] = (),
-    keep_nulls: bool = False,
-) -> DataFrame:
-    """One aggregation producing per-(group, distinct value) side counts.
-
-    The shared scan for ``fused_tests_from_sketch``: PSI, KS, and JS all
-    reduce to functions of the (v, c_ref, c_prod) sketch, so running them as
-    three separate grouped tests costs three full scans of both tables plus
-    three sets of driver/codegen latency — the Amdahl term that capped
-    end-to-end 8->32 scaling at 0.66 in round 1. Intended for columns whose
-    distinct-value set is bounded (token counts, categorical ints); for
-    unbounded continuous columns use the individual *_test_grouped operators,
-    whose distributed prefix-sum path never collects the sketch.
-
-    ``keep_nulls=True`` skips the finite filter so NULL values appear as one
-    ``v IS NULL`` row per group — letting ``profile_from_sketch`` compute
-    null fractions and total row counts from the SAME scan (intended for
-    integral columns, where null is the only non-finite state; drift kernels
-    drop the null rows driver-side).
-    """
-    if keep_nulls:
-        def prep(df: DataFrame, side: int) -> DataFrame:
-            return df.select(
-                *group_cols,
-                F.lit(side).alias("side"),
-                F.col(column).cast("double").alias("v"),
-            )
-
-        sides = prep(ref_df, _REF).unionByName(prep(prod_df, _PROD))
-    else:
-        sides = _sides(ref_df, prod_df, column, group_cols)
-    return sides.groupBy(*group_cols, "v").agg(
-        F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("c_ref"),
-        F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("c_prod"),
-    )
-
-
-def _weighted_percentiles(
-    values: np.ndarray, counts: np.ndarray, probs: np.ndarray
-) -> np.ndarray:
-    """Exact percentiles of the expanded multiset (Spark F.percentile /
-    numpy 'linear' semantics) from (sorted value, count) pairs."""
-    cum = np.cumsum(counts)
-    n = int(cum[-1])
-    k = probs * (n - 1)
-    lo_idx = np.searchsorted(cum, np.floor(k), side="right")
-    hi_idx = np.searchsorted(cum, np.ceil(k), side="right")
-    lo, hi = values[lo_idx], values[hi_idx]
-    return lo + (k - np.floor(k)) * (hi - lo)
-
 
 def fused_tests_from_sketch(
     sketch_pdf: pd.DataFrame,
@@ -1427,97 +1360,19 @@ def fused_tests_from_sketch(
 ) -> dict[str, pd.DataFrame]:
     """PSI + KS + JS + W1 grouped verdict frames from ONE collected sketch.
 
-    Exactly reproduces the *_test_grouped outputs (same scores and
-    error strings; groups with production data but an empty reference get
-    PSI error rows rather than vanishing) while paying for one Spark job
-    instead of five (PSI needs two passes standalone). Driver cost is
+    The kernel table of the standalone tests' collect plan, all four at
+    once: the same scores and error strings as the *_test_grouped
+    operators for one Spark job instead of four. Driver cost is
     O(groups x distinct values) — the collected sketch.
     """
-    # a keep_nulls sketch carries (v IS NULL) rows for profile_from_sketch;
-    # the drift kernels operate on clean values only (parity with _sides)
-    sketch_pdf = sketch_pdf[sketch_pdf["v"].notna()]
-    out_psi: list = []
-    out_ks: list = []
-    out_js: list = []
-    out_w1: list = []
-    n_bins_psi = config.psi_bins
-    n_bins_js = config.hist_bins
-
-    empty_ref_msg = "Reference dataset is empty after removing NaN/inf"
-    empty_prod_msg = "Production dataset is empty after removing NaN/inf"
-
-    any_key = False
-    for key, sub in _iter_group_subframes(sketch_pdf, group_cols):
-        any_key = True
-        sub = sub.sort_values("v")
-        v = sub["v"].to_numpy(dtype=np.float64)
-        cr = sub["c_ref"].to_numpy(dtype=np.int64)
-        cp = sub["c_prod"].to_numpy(dtype=np.int64)
-        n_ref, n_prod = int(cr.sum()), int(cp.sum())
-
-        # ---- KS (ks_test_grouped parity) --------------------------------
-        if n_ref == 0:
-            out_ks.append((key, None, "Reference dataset contains only NaN/inf values"))
-        elif n_prod == 0:
-            out_ks.append((key, None, "Production dataset contains only NaN/inf values"))
-        else:
-            d = float(
-                np.max(np.abs(np.cumsum(cr) / n_ref - np.cumsum(cp) / n_prod))
-            )
-            out_ks.append(
-                (
-                    key,
-                    ks_verdict(d, n_ref, n_prod, config.ks_threshold, column,
-                               method=config.ks_pvalue_method),
-                    None,
-                )
-            )
-
-        # ---- JS (js_test_grouped parity: shared-range equal-width) -------
-        if n_ref == 0:
-            out_js.append((key, None, empty_ref_msg))
-        elif n_prod == 0:
-            out_js.append((key, None, empty_prod_msg))
-        else:
-            lo, hi = float(v[0]), float(v[-1])
-            if hi == lo:
-                bins = np.zeros(len(v), dtype=np.int64)
-            else:
-                width = (hi - lo) / n_bins_js
-                bins = np.minimum(
-                    np.floor((v - lo) / width).astype(np.int64), n_bins_js - 1
-                )
-                bins[v == hi] = n_bins_js - 1
-            rc = np.zeros(n_bins_js, dtype=np.int64)
-            pc = np.zeros(n_bins_js, dtype=np.int64)
-            np.add.at(rc, bins, cr)
-            np.add.at(pc, bins, cp)
-            out_js.append(
-                (key, js_from_counts(rc, pc, config.js_threshold, feature_name=column), None)
-            )
-
-        # ---- W1 (wasserstein_test_grouped parity) ------------------------
-        out_w1.append(
-            (key, *_w1_kernel(v, cr, cp, config.wasserstein_threshold, column))
-        )
-
-        # ---- PSI (psi_test_grouped parity; a group with production data
-        # but an EMPTY reference — e.g. an orphan partition absent from the
-        # baseline — reports an error row, never silently vanishes) --------
-        out_psi.append(
-            (key, *_psi_kernel(v, cr, cp, n_bins_psi, config.psi_threshold, column))
-        )
-
-    if not any_key and not group_cols:
-        out_ks.append(((), None, "Reference dataset contains only NaN/inf values"))
-        out_js.append(((), None, empty_ref_msg))
-        out_w1.append(((), None, "empty side after removing NaN/inf"))
-
+    frames = _verdicts_from_sketch(
+        sketch_pdf, group_cols, column, config, ("psi", "ks", "js", "w1")
+    )
     return {
-        "psi": _verdict_frame(out_psi, group_cols),
-        "ks": _verdict_frame(out_ks, group_cols),
-        "jensen_shannon": _verdict_frame(out_js, group_cols),
-        "wasserstein": _verdict_frame(out_w1, group_cols),
+        "psi": frames["psi"],
+        "ks": frames["ks"],
+        "jensen_shannon": frames["js"],
+        "wasserstein": frames["w1"],
     }
 
 
@@ -1606,6 +1461,26 @@ def _single(frame: pd.DataFrame, test: str, threshold: float, column: str) -> Dr
 # Anderson-Darling k-sample (k=2) — SURVEY T7
 # ---------------------------------------------------------------------------
 
+def _ad_verdict(
+    s_ref: float, s_prod: float, n: int, m: int, threshold: float, column: str
+) -> DriftVerdict:
+    """A2akN from the per-sample inner sums, significance interpolated."""
+    big_n = n + m
+    a2akn = (big_n - 1) / big_n * (s_ref / n + s_prod / m) / big_n
+    tk, sig = anderson_darling_significance(a2akn, [n, m])
+    return DriftVerdict(
+        test="anderson_darling",
+        score=sig,
+        threshold=threshold,
+        is_drifted=bool(sig < threshold),
+        p_value=sig,
+        reference_size=n,
+        production_size=m,
+        feature_name=column,
+        details={"statistic": a2akn, "normalized": tk},
+    )
+
+
 def anderson_darling_test_grouped(
     ref_df: DataFrame,
     prod_df: DataFrame,
@@ -1615,76 +1490,18 @@ def anderson_darling_test_grouped(
 ) -> pd.DataFrame:
     """Midrank two-sample Anderson-Darling per group (Scholz-Stephens A2akN).
 
-    Same distributed shape as KS: per-(group, distinct value) counts, one
-    window pass builds the midrank cumulative terms, one aggregation reduces
-    the per-sample inner sums; normalization + significance interpolation run
+    One plan: the per-value sketch through the over-cap distributed ECDF
+    (``_overcap_verdicts``), whose grouped aggregation reduces the
+    per-sample inner sums; normalization + significance interpolation run
     on scalars driver-side (functions.numeric.anderson_darling_significance,
     matching scipy.stats.anderson_ksamp's published algorithm — the reference
     wraps that at anderson_darling.py:50-55 and reports
     significance_level/100 as the p-value).
     """
-    from aumos_drift_detector_spark.functions.numeric import (
-        anderson_darling_significance,
-    )
-
-    sides = _sides(ref_df, prod_df, column, group_cols)
-    per_value = sides.groupBy(*group_cols, "v").agg(
-        F.sum(F.when(F.col("side") == _REF, 1).otherwise(0)).alias("cr"),
-        F.sum(F.when(F.col("side") == _PROD, 1).otherwise(0)).alias("cp"),
-    )
-    lj = F.col("cr") + F.col("cp")
-    cum = _cumulative_per_value(per_value, group_cols, ["cr", "cp"]).select(
-        *group_cols,
-        F.col("cr"),
-        F.col("cp"),
-        lj.alias("lj"),
-        (F.col("cum_cr") + F.col("cum_cp") - lj / 2.0).alias("bj"),
-        (F.col("cum_cr") - F.col("cr") / 2.0).alias("m_ref"),
-        (F.col("cum_cp") - F.col("cp") / 2.0).alias("m_prod"),
-        F.col("total_cr").alias("n_ref"),
-        F.col("total_cp").alias("n_prod"),
-    )
-    n_total = F.col("n_ref") + F.col("n_prod")
-    denom = F.col("bj") * (n_total - F.col("bj")) - n_total * F.col("lj") / 4.0
-    inner_ref = F.col("lj") * (n_total * F.col("m_ref") - F.col("n_ref") * F.col("bj")) ** 2
-    inner_prod = F.col("lj") * (n_total * F.col("m_prod") - F.col("n_prod") * F.col("bj")) ** 2
-    sums = cum.groupBy(*group_cols).agg(
-        F.sum(F.when(denom > 0, F.try_divide(inner_ref, denom))).alias("s_ref"),
-        F.sum(F.when(denom > 0, F.try_divide(inner_prod, denom))).alias("s_prod"),
-        F.max("n_ref").alias("n_ref"),
-        F.max("n_prod").alias("n_prod"),
-    )
-    pdf = sums.toPandas()
-    verdicts = []
-    for _, r in pdf.iterrows():
-        key = tuple(r[g] for g in group_cols)
-        n, m = int(r["n_ref"] or 0), int(r["n_prod"] or 0)
-        if n == 0 or m == 0:
-            verdicts.append((key, None, "empty side after removing NaN/inf"))
-            continue
-        big_n = n + m
-        a2akn = (big_n - 1) / big_n * (float(r["s_ref"]) / n + float(r["s_prod"]) / m) / big_n
-        tk, sig = anderson_darling_significance(a2akn, [n, m])
-        verdicts.append(
-            (
-                key,
-                DriftVerdict(
-                    test="anderson_darling",
-                    score=sig,
-                    threshold=threshold,
-                    is_drifted=bool(sig < threshold),
-                    p_value=sig,
-                    reference_size=n,
-                    production_size=m,
-                    feature_name=column,
-                    details={"statistic": a2akn, "normalized": tk},
-                ),
-                None,
-            )
-        )
-    if not verdicts and not group_cols:
-        verdicts.append(((), None, "empty side after removing NaN/inf"))
-    return _verdict_frame(verdicts, group_cols)
+    config = replace(DEFAULT_CONFIG, sketch_collect_max_rows=0)
+    return _sketch_tests(
+        ref_df, prod_df, column, group_cols, config, ("ad",), threshold
+    )["ad"]
 
 
 def anderson_darling_test(

@@ -215,48 +215,6 @@ def histogram(
     )
 
 
-def quantile_edges(
-    df: DataFrame,
-    column: str,
-    n_bins: int,
-    group_cols: Sequence[str] = (),
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """Equal-frequency bin edges from a reference population (SURVEY A3).
-
-    Returns ``(group_cols..., edges array<double>)`` where edges are the
-    n_bins+1 quantiles at linspace(0,1,n_bins+1) — the reference's
-    ``np.percentile(reference, linspace(0,100,k+1))`` (psi.py:156-157).
-    Exact `percentile` (linear interpolation, numpy-compatible) by default;
-    `percentile_approx` when ``config.approx``.
-
-    Exact-path plan: rows pre-aggregate to (value, count) in a parallel
-    combiner pass, then ``percentile(v, probs, frequency=cnt)`` runs on the
-    DISTINCT-value sketch — the percentile buffer holds distinct values
-    instead of every raw row, and ``ref_distinct`` comes from the same
-    sketch so there is no mixed-distinct Expand (which would double-scan
-    every row). Same exact interpolation semantics (weighted expansion).
-    """
-    probs = [i / n_bins for i in range(n_bins + 1)]
-    clean = clean_values(df, column, group_cols)
-    if config.approx:
-        return clean.groupBy(*group_cols).agg(
-            F.percentile_approx(
-                F.col("v"), probs, config.approx_percentile_accuracy
-            ).alias("edges"),
-            F.count("v").alias("ref_count"),
-            F.approx_count_distinct("v").alias("ref_distinct"),
-        )
-    per_value = clean.groupBy(*group_cols, "v").agg(F.count("v").alias("cnt"))
-    return per_value.groupBy(*group_cols).agg(
-        F.percentile(
-            F.col("v"), F.array(*[F.lit(p) for p in probs]), F.col("cnt")
-        ).alias("edges"),
-        F.sum("cnt").alias("ref_count"),
-        F.count(F.lit(1)).alias("ref_distinct"),
-    )
-
-
 def bucket_by_edges(value: Column, inner_edges: Column) -> Column:
     """Bin index against arbitrary broadcast edges with ±inf end caps.
 

@@ -274,11 +274,7 @@ class TestParallelPrefixSumPlans:
 
         ref, prod = self._grouped_plan(spark, fn_name)
         # rebuild the distributed portion of each test's plan (pre-collect)
-        sides = drift._sides(ref, prod, "value", ("g",))
-        per_value = sides.groupBy("g", "v").agg(
-            F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).alias("c_ref"),
-            F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).alias("c_prod"),
-        )
+        per_value = drift.per_value_sketch(ref, prod, "value", ("g",))
         cum = drift._cumulative_per_value(
             per_value, ("g",), ["c_ref", "c_prod"],
             with_next_value=(fn_name == "wasserstein_test_grouped"),
@@ -288,12 +284,9 @@ class TestParallelPrefixSumPlans:
         assert "Exchange SinglePartition" not in plan, plan
 
     def test_selection_quantiles_match_numpy_and_sketch(self, spark):
-        """quantile_edges_selection == numpy percentile == the sketch path,
-        grouped and ungrouped, duplicates included."""
+        """quantile_edges_selection == numpy percentile == the driver sketch
+        kernel (bitwise), grouped and ungrouped, duplicates included."""
         import pandas as pd
-
-        from aumos_drift_detector_spark.config import DEFAULT_CONFIG
-        from aumos_drift_detector_spark.operators.profile import quantile_edges
 
         rng = np.random.default_rng(23)
         vals = np.round(rng.lognormal(2, 1, 20000), 1)  # heavy duplication
@@ -301,36 +294,28 @@ class TestParallelPrefixSumPlans:
         df = spark.createDataFrame(pd.DataFrame({"g": g, "value": vals}))
 
         sel = drift.quantile_edges_selection(
-            df, "value", 10, ("g",), DEFAULT_CONFIG
+            df, "value", 10, ("g",)
         ).toPandas().set_index("g")
-        sk = quantile_edges(df, "value", 10, ("g",), DEFAULT_CONFIG).toPandas(
-        ).set_index("g")
         for grp in ("a", "b"):
             sub = vals[g == grp]
             want = np.percentile(sub, np.linspace(0, 100, 11))
             assert np.asarray(sel.loc[grp, "edges"]) == pytest.approx(
                 want.tolist(), abs=1e-12
             )
-            assert np.asarray(sel.loc[grp, "edges"]) == pytest.approx(
-                np.asarray(sk.loc[grp, "edges"]).tolist(), abs=0
-            )
+            uniq, counts = np.unique(sub, return_counts=True)
+            sk = drift._weighted_percentiles(uniq, counts, np.linspace(0, 1, 11))
+            assert list(sel.loc[grp, "edges"]) == sk.tolist()
             assert sel.loc[grp, "ref_count"] == 10000
             assert sel.loc[grp, "ref_distinct"] == len(np.unique(sub))
         # ungrouped
-        sel1 = drift.quantile_edges_selection(
-            df, "value", 4, (), DEFAULT_CONFIG
-        ).collect()[0]
+        sel1 = drift.quantile_edges_selection(df, "value", 4).collect()[0]
         assert list(sel1["edges"]) == pytest.approx(
             np.percentile(vals, [0, 25, 50, 75, 100]).tolist(), abs=1e-12
         )
 
     def test_selection_quantiles_tiny_group(self, spark):
-        from aumos_drift_detector_spark.config import DEFAULT_CONFIG
-
         df = spark.createDataFrame([(5.0,)], ["value"])
-        row = drift.quantile_edges_selection(
-            df, "value", 10, (), DEFAULT_CONFIG
-        ).collect()[0]
+        row = drift.quantile_edges_selection(df, "value", 10).collect()[0]
         assert list(row["edges"]) == [5.0] * 11  # n=1: every quantile = v
 
     def test_psi_selection_plan_identical_verdict(self, spark, ):
@@ -347,17 +332,13 @@ class TestParallelPrefixSumPlans:
         )
         base = drift.psi_test(ref, prod, "value")
         sel = drift.psi_test(
-            ref, prod, "value",
-            config=EngineConfig(exact_quantile_plan="selection"),
+            ref, prod, "value", config=EngineConfig(sketch_collect_max_rows=0)
         )
-        # edges agree to the last ulp of lerp arithmetic (Spark's internal
-        # percentile accumulates positions in a different order), so scores
-        # agree to float noise unless a data value sits exactly on a boundary
-        assert sel.score == pytest.approx(base.score, rel=1e-9)
+        # over the cap PSI's edges come from distributed rank selection with
+        # the driver kernel's own lerp: the verdicts are bitwise identical
+        assert sel.score == base.score
         assert sel.is_drifted == base.is_drifted
-        assert sel.details["bin_edges"] == pytest.approx(
-            base.details["bin_edges"], rel=1e-13
-        )
+        assert sel.details["bin_edges"] == base.details["bin_edges"]
 
     def test_selection_quantile_data_path_no_single_partition(self, spark):
         """The grouped data-proportional half of the selection-quantile plan
@@ -877,6 +858,174 @@ class TestAdaptiveSketchPlans:
             drift.psi_test(value_df_factory([np.nan, np.nan]), prod, "value")
         with pytest.raises(ValueError, match="empty after removing"):
             drift.psi_test(prod, value_df_factory([np.nan]), "value")
+
+    # -- plan equivalence: collect vs over-cap (cap 0) vs overflow (cap 10) --
+
+    _PLAN_FNS = {
+        "psi": "psi_test_grouped",
+        "ks": "ks_test_grouped",
+        "w1": "wasserstein_test_grouped",
+    }
+    _EMPTY_REF = {
+        "psi": "Reference dataset is empty after removing NaN/inf",
+        "ks": "Reference dataset contains only NaN/inf values",
+        "w1": "empty side after removing NaN/inf",
+    }
+    _EMPTY_PROD = {
+        "psi": "Production dataset is empty after removing NaN/inf",
+        "ks": "Production dataset contains only NaN/inf values",
+        "w1": "empty side after removing NaN/inf",
+    }
+
+    @pytest.fixture(scope="class")
+    def plan_runs(self, spark):
+        """Every (test, grouping, cap) run once, frames sorted by group."""
+        from aumos_drift_detector_spark.config import EngineConfig
+
+        rng = np.random.default_rng(42)
+        mass = np.concatenate([np.full(60, 7.0), rng.integers(0, 20, 40)])
+        groups = {
+            # integer ties sitting on PSI edges
+            "ties": (rng.integers(0, 12, 300), rng.integers(1, 14, 250)),
+            # two-decimal prices, like lineitem's: edges cut by Spark's
+            # percentile differ from the lerp in the last bits here
+            "cont": (
+                np.round(rng.lognormal(3, 1, 200) * 1.037, 2),
+                np.round(rng.lognormal(3.1, 1, 150), 2),
+            ),
+            "orphan": (np.array([]), rng.normal(0, 1, 40)),
+            "const": (np.full(30, 5.0), rng.normal(5, 1, 30)),
+            "nanprod": (rng.normal(0, 1, 40), np.full(10, np.nan)),
+            None: (rng.normal(0, 1, 60), rng.normal(0.5, 1, 50)),
+            # >= 50% of the mass on one value: IQR 0, W1 std fallback
+            "mass": (mass, rng.integers(0, 20, 80)),
+        }
+
+        def frame(rows):
+            return spark.createDataFrame(
+                [(g, float(x)) for g, xs in rows for x in xs], "g string, value double"
+            )
+
+        pairs = {
+            "grouped": [(
+                frame([(g, ref) for g, (ref, _) in groups.items()]),
+                frame([(g, prod) for g, (_, prod) in groups.items()]),
+                groups,
+            )],
+            "ungrouped": [
+                (frame([(None, ref)]), frame([(None, prod)]), {None: (ref, prod)})
+                for ref, prod in [
+                    (np.concatenate([mass, groups["ties"][0]]), groups["ties"][1]),
+                    (np.full(5, np.nan), groups["ties"][1]),
+                ]
+            ],
+        }
+        cache = {}
+
+        def run(test, grouping, cap):
+            if (test, grouping, cap) not in cache:
+                cfg = EngineConfig() if cap is None else EngineConfig(
+                    sketch_collect_max_rows=cap
+                )
+                fn = getattr(drift, self._PLAN_FNS[test])
+                out = []
+                for ref, prod, arrays in pairs[grouping]:
+                    by = ("g",) if grouping == "grouped" else ()
+                    f = fn(ref, prod, "value", by, config=cfg)
+                    keys = list(f["g"]) if by else [None] * len(f)
+                    f = f.assign(_key=[str(k) for k in keys], _arr=[arrays[k] for k in keys])
+                    out.append(f.sort_values("_key").reset_index(drop=True))
+                cache[test, grouping, cap] = out
+            return cache[test, grouping, cap]
+
+        return run
+
+    def _check_oracle(self, test, frame):
+        """Default cap: each row against numpy on the expanded arrays."""
+        for _, r in frame.iterrows():
+            ref, prod = (a[np.isfinite(a)] for a in r["_arr"])
+            if ref.size == 0:
+                assert r["error"] == self._EMPTY_REF[test]
+            elif test == "psi" and np.unique(ref).size == 1:
+                assert "constant" in r["error"]
+            elif prod.size == 0:
+                assert r["error"] == self._EMPTY_PROD[test]
+            elif test == "psi":
+                want = np.percentile(ref, np.linspace(0, 100, 11))
+                assert r["details"]["bin_edges"] == pytest.approx(want.tolist(), rel=1e-12)
+            else:
+                allv = np.unique(np.concatenate([ref, prod]))
+                gap = np.abs(
+                    np.searchsorted(np.sort(ref), allv, side="right") / ref.size
+                    - np.searchsorted(np.sort(prod), allv, side="right") / prod.size
+                )
+                if test == "ks":
+                    assert r["details"]["statistic"] == pytest.approx(gap.max(), abs=1e-12)
+                else:
+                    w1 = float(np.sum(gap[:-1] * np.diff(allv)))
+                    q25, q75 = np.percentile(ref, [25, 75])
+                    iqr = q75 - q25 if q75 - q25 >= 1e-10 else (np.std(ref) or 1.0)
+                    assert r["details"]["raw_distance"] == pytest.approx(w1, rel=1e-12)
+                    assert r["details"]["iqr"] == pytest.approx(iqr, rel=1e-12)
+
+    def test_overcap_psi_null_int_group_key_without_arrow(self, spark):
+        """The over-cap edge table must carry a NULL integer group key
+        through the non-Arrow createDataFrame path too (pandas would turn
+        the key column into float NaN, which IntegerType rejects)."""
+        from aumos_drift_detector_spark.config import EngineConfig
+
+        rng = np.random.default_rng(1)
+        rows = [(g, float(x)) for g in (1, None) for x in rng.integers(0, 30, 100)]
+        ref = spark.createDataFrame(rows, "g int, value double")
+        prod = spark.createDataFrame([(g, v + 1.5) for g, v in rows], "g int, value double")
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "false")
+        try:
+            slow = drift.psi_test_grouped(
+                ref, prod, "value", ("g",), config=EngineConfig(sketch_collect_max_rows=0)
+            )
+        finally:
+            spark.conf.set(key, old)
+        fast = drift.psi_test_grouped(ref, prod, "value", ("g",))
+        assert sorted(zip(slow["g"].astype(str), slow["score"])) == sorted(
+            zip(fast["g"].astype(str), fast["score"])
+        )
+
+    @staticmethod
+    def _verdict_rows(frame):
+        """(drifted, sizes, score, p-value, edges, W1 details) of ok rows."""
+        return [
+            (
+                r["is_drifted"], r["reference_size"], r["production_size"],
+                r["score"], None if pd.isna(r["p_value"]) else r["p_value"],
+                r["details"].get("bin_edges"),
+                r["details"].get("raw_distance"), r["details"].get("iqr"),
+            )
+            for _, r in frame[frame["error"].isna()].iterrows()
+        ]
+
+    @pytest.mark.parametrize("cap", [None, 0, 10], ids=["default_cap", "cap0", "cap10"])
+    @pytest.mark.parametrize("grouping", ["grouped", "ungrouped"])
+    @pytest.mark.parametrize("test", ["psi", "ks", "w1"])
+    def test_plan_equivalence_matrix(self, plan_runs, test, grouping, cap):
+        """Collect plan, over-cap plan and cap overflow give identical
+        verdicts: PSI score/edges and KS score/p-value bitwise, W1 to 1e-12,
+        the same groups (NULL key and orphan included) and error strings."""
+        for got, want in zip(plan_runs(test, grouping, cap), plan_runs(test, grouping, None)):
+            if cap is None:
+                self._check_oracle(test, got)
+                continue
+            assert list(got["_key"]) == list(want["_key"])
+            assert list(got["error"]) == list(want["error"])
+            g, w = self._verdict_rows(got), self._verdict_rows(want)
+            if test != "w1":
+                assert g == w
+                continue
+            assert [r[:3] for r in g] == [r[:3] for r in w]
+            assert [x for r in g for x in (r[3], r[6], r[7])] == pytest.approx(
+                [x for r in w for x in (r[3], r[6], r[7])], rel=1e-12
+            )
 
 
 class TestThousandGroupScale:

@@ -103,14 +103,67 @@ class TestJoinStrategies:
         import re
         assert not re.search(r"tokens#\d", join_and_above)
 
-    def test_psi_broadcasts_quantile_edges(self, spark, parquet_tables):
-        from aumos_drift_detector_spark.operators.profile import quantile_edges
 
+class TestOvercapDriftPlans:
+    """Over the sketch cap, PSI/KS/W1/AD run off ONE persisted sketch: every
+    raw scan sits below the single per-value sketch aggregate, no stage
+    funnels a group through one reducer, and no percentile buffer exists."""
+
+    @staticmethod
+    def _ancestors(lines, i):
+        """Tree-string ancestors of line i (nearest shallower lines)."""
+        def depth(line):
+            return len(line) - len(line.lstrip(" :+-"))
+
+        out, d = [], depth(lines[i])
+        for line in reversed(lines[:i]):
+            if line.strip() and depth(line) < d:
+                out.append(line)
+                d = depth(line)
+        return out
+
+    @pytest.mark.parametrize(
+        "fn_name",
+        ["psi_test_grouped", "ks_test_grouped", "wasserstein_test_grouped",
+         "anderson_darling_test_grouped"],
+    )
+    def test_overcap_reads_raw_rows_once(
+        self, spark, parquet_tables, monkeypatch, fn_name
+    ):
+        from dataclasses import replace
+
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        from aumos_drift_detector_spark.config import DEFAULT_CONFIG
+        from aumos_drift_detector_spark.operators import drift
+
+        plans = []
+        collect = DataFrame.collect
+
+        def recording_collect(df):
+            rows = collect(df)
+            plans.append(_plan(df))
+            return rows
+
+        monkeypatch.setattr(DataFrame, "collect", recording_collect)
         fact = spark.read.parquet(f"{parquet_tables}/fact")
-        edges = quantile_edges(fact, "val", 10, ("fk",))
-        sides = fact.select("fk", F.col("val").alias("v"))
-        joined = sides.join(F.broadcast(edges), ["fk"], "inner")
-        assert "BroadcastHashJoin" in _plan(joined)
+        ref = fact.where(F.col("fk") != "z")
+        kwargs = {} if fn_name.startswith("anderson") else {
+            "config": replace(DEFAULT_CONFIG, sketch_collect_max_rows=0)
+        }
+        getattr(drift, fn_name)(ref, fact, "val", ("fk",), **kwargs)
+        assert len(plans) == (2 if fn_name.startswith("psi") else 1)
+        for plan in plans:
+            assert "Exchange SinglePartition" not in plan, plan
+            assert "percentile" not in plan, plan
+            lines = plan.split("\n")
+            scans = [i for i, line in enumerate(lines) if "FileScan" in line]
+            assert scans, plan
+            for i in scans:
+                assert any(
+                    "HashAggregate(keys=[fk#" in a and "(side#" in a
+                    for a in self._ancestors(lines, i)
+                ), lines[i]
 
 
 class TestFusedSketchPlan:

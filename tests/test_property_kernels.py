@@ -227,13 +227,16 @@ def _w1_expanded_oracle(v, cr, cp):
 @example([(0, 3, 0), (1, 0, 3)])            # disjoint supports
 @given(_w1_sketch)
 def test_w1_kernel_matches_expanded_oracle(sketch):
+    from aumos_drift_detector_spark.config import EngineConfig
     from aumos_drift_detector_spark.operators.drift import _w1_kernel
+
+    cfg = EngineConfig(wasserstein_threshold=0.1)
 
     rows = sorted({s[0]: s for s in sketch}.values())  # distinct values
     v = np.array([r[0] for r in rows], dtype=np.float64) * 0.5
     cr = np.array([r[1] for r in rows], dtype=np.int64)
     cp = np.array([r[2] for r in rows], dtype=np.int64)
-    verdict, err = _w1_kernel(v, cr, cp, threshold=0.1, column="x")
+    verdict, err = _w1_kernel(v, cr, cp, cfg, "x")
     if cr.sum() == 0 or cp.sum() == 0:
         assert err is not None and "empty side" in err
         return
@@ -243,9 +246,9 @@ def test_w1_kernel_matches_expanded_oracle(sketch):
     assert raw >= 0.0
     # translation invariance; positive-scale equivariance of the raw distance
     v2 = v + 17.25
-    raw_shift = _w1_kernel(v2, cr, cp, 0.1, "x")[0].details["raw_distance"]
+    raw_shift = _w1_kernel(v2, cr, cp, cfg, "x")[0].details["raw_distance"]
     assert raw_shift == pytest.approx(raw, abs=1e-9)
-    raw_scaled = _w1_kernel(v * 3.0, cr, cp, 0.1, "x")[0].details["raw_distance"]
+    raw_scaled = _w1_kernel(v * 3.0, cr, cp, cfg, "x")[0].details["raw_distance"]
     assert raw_scaled == pytest.approx(3.0 * raw, rel=1e-9, abs=1e-9)
 
 
