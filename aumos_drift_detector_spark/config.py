@@ -1,8 +1,9 @@
 """Engine configuration: thresholds, binning, and exact-vs-approx policy.
 
 Default thresholds mirror the reference's settings (reference settings.py:24-56
-and per-test defaults: PSI 0.2 / warning 0.1, p-value tests 0.05, JS/Hellinger/
-Wasserstein 0.1, MMD 0.05).
+and per-test defaults: PSI 0.2, p-value tests 0.05, JS/Hellinger/Wasserstein
+0.1, MMD 0.05). The concept-drift detectors (ADWIN, DDM, EDDM) are not
+configured here: they keep their own constructor defaults.
 
 `approx` switches the quantile/distinct machinery between exact (test parity
 with numpy: Spark `percentile`, `count_distinct`) and sketch-based
@@ -19,7 +20,6 @@ from dataclasses import dataclass, field
 class EngineConfig:
     # drift thresholds (reference defaults)
     psi_threshold: float = 0.2
-    psi_warning_threshold: float = 0.1
     ks_threshold: float = 0.05
     # 'auto' mirrors scipy.stats.ks_2samp (exact lattice DP when
     # max(n, m) <= 10_000, else asymptotic); the exact DP is O(n*m) driver
@@ -57,16 +57,6 @@ class EngineConfig:
     # one-pass plan.
     sketch_collect_max_rows: int = 8_000_000
     salt_buckets: int = 16            # salting fan-out for skewed aggregations
-    broadcast_dim_threshold: int = 10_000_000  # bytes; hint only
-
-    # concept drift defaults (reference adwin.py/ddm.py)
-    adwin_delta: float = 0.002
-    ddm_warning_level: float = 2.0
-    ddm_drift_level: float = 3.0
-    ddm_min_instances: int = 30
-    eddm_warning_level: float = 0.95
-    eddm_drift_level: float = 0.90
-    eddm_min_errors: int = 30
 
 
 DEFAULT_CONFIG = EngineConfig()

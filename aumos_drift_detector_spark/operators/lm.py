@@ -30,11 +30,10 @@ Scale plan:
     dims: unigram dims are broadcast-sized in any real corpus (vocab,
     not corpus, cardinality), bigram/trigram joins are shuffle joins
     co-partitioned on their join keys and AQE broadcasts them when a
-    filtered slice fits.  One deployment caveat (measured in
-    scripts/diag_tokens_scale.py): the STATIC planner's pre-execution
-    estimate of the post-aggregation bigram/trigram dims is optimistic,
-    and on a corpus with little n-gram reuse it can pick a driver-killing
-    broadcast — pin ``spark.sql.autoBroadcastJoinThreshold`` to a bound
+    filtered slice fits.  One measured deployment caveat: the STATIC
+    planner's pre-execution estimate of the post-aggregation
+    bigram/trigram dims is optimistic, and on a corpus with little n-gram
+    reuse it can pick a driver-killing broadcast — pin ``spark.sql.autoBroadcastJoinThreshold`` to a bound
     the driver can hold (AQE still re-converts with real runtime sizes);
   - the corpus total is a 1-row aggregate attached by broadcast
     cross-join (the repo-wide scalar-attach convention).
@@ -135,9 +134,12 @@ def _ngram_dims(base: DataFrame, ckpt: bool = True) -> NgramLM:
     )
     # total token count == sum of unigram counts == sum of word-array
     # sizes; the latter reads the checkpointed base directly instead of
-    # re-running the unigram aggregation branch
+    # re-running the unigram aggregation branch. A NULL-text document adds
+    # nothing: size(NULL) is -1 with ANSI off, so it is masked to NULL
     total = base.agg(
-        F.sum(F.size("_ws")).cast("long").alias("total_tokens")
+        F.sum(F.when(F.col("_ws").isNotNull(), F.size("_ws")))
+        .cast("long")
+        .alias("total_tokens")
     )
     return NgramLM(uni=uni, bi=bi, tri=tri, total=total)
 

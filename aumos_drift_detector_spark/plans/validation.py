@@ -7,9 +7,10 @@ over ``(doc_id, tokens, n_tok, source)`` that
    integrity (broadcast anti-join), the ``n_tok <=> size(tokens)`` row
    invariant, and token-array equality vs the baseline table (hash-prefiltered
    equi-join);
-2. computes per-`source`-partition column profiles (single wide aggregation)
-   and distribution drift vs baseline — PSI + KS on ``n_tok``, Jensen-Shannon
-   + chi-squared on the token-id histogram;
+2. computes per-`source`-partition distribution drift vs baseline — PSI + KS
+   + Jensen-Shannon on ``n_tok`` and the ``n_tok`` column profile, all from
+   one per-value sketch job; Jensen-Shannon + chi-squared on the token-id
+   histogram;
 3. writes three parquet outputs — ``results`` (one verdict row per
    (partition, check)), ``violations`` (exact offending rows), ``manifest``
    (per-partition completion rows with lineage + wall time) — and **resumes**
@@ -60,7 +61,7 @@ from aumos_drift_detector_spark.config import DEFAULT_CONFIG, EngineConfig
 from aumos_drift_detector_spark.functions.kernels import recommended_action, severity
 from aumos_drift_detector_spark.operators import constraints as C
 from aumos_drift_detector_spark.operators import drift as D
-from aumos_drift_detector_spark.operators.profile import profile_columns
+from aumos_drift_detector_spark.operators.text import catalyst_size_bytes
 from aumos_drift_detector_spark.sources.synth import TOKEN_SCHEMA
 
 RESULTS_SCHEMA = T.StructType(
@@ -130,10 +131,6 @@ class ValidationSettings:
     # commit granularity: partitions per batch (None = all pending in one
     # batch). Smaller batches = less lost work on a kill, more job launches.
     partition_batch_size: int | None = None
-    # ONE per-value sketch job feeds PSI+KS+JS on n_tok (vs 5 jobs / 3 table
-    # scans separate). Safe while groups x distinct(n_tok) is collect-sized —
-    # n_tok is bounded by max sequence length. False = independent tests.
-    fused_ntok_drift: bool = True
     # token histogram physical plan: True = Arrow flatten+bincount with NO
     # explode (shuffle moves pre-aggregated counts, not token rows);
     # False = the explode + codegen hash-aggregate plan; None (default) =
@@ -149,32 +146,24 @@ class ValidationSettings:
     # job dominates the pass (alpha ~0.95) and the Arrow plan stops losing
     # and starts shifting load OUT of the JVM (its co-running JVM jobs
     # speed up: ntok_sketch 33.2s vs 59.1s at 16M). Gate-clean same-day
-    # local[32] pairs (scripts/scale_points.jsonl): 400k explode 2-3x
-    # faster; 4M rows / 1.8 GB arrow 44.0s vs explode 49.3s; 16M / 7.3 GB
+    # local[32] pairs (scripts/scale_points.jsonl; BASELINE.md "Round-5
+    # in-pass token-histogram A/B"): 400k explode 2-3x faster; 4M rows /
+    # 1.8 GB arrow 44.0s vs explode 49.3s; 16M / 7.3 GB
     # arrow 114.5s vs explode 116.0s (r4's better windows had arrow at
     # 74-90s). Auto therefore picks Arrow only when the CURRENT frame's
     # Catalyst-estimated scan size crosses ``token_hist_arrow_min_bytes`` —
     # the same cost-based-stats mechanism AQE uses for join strategy. Both
     # plans are bitwise-equal (pytest-pinned): purely a physical choice.
     token_hist_arrow: bool | None = None
-    # Auto threshold (bytes, Catalyst optimizedPlan().stats().sizeInBytes
-    # of the current frame). Calibrated on the A/Bs above: explode wins
-    # decisively at 0.18 GB, arrow ties-or-wins from 1.8 GB up, so the
-    # gate sits at 1 GiB — below it the explode plan's decisive small-input
-    # win rules; above it arrow never loses and frees JVM cores for the
-    # concurrent jobs. Frames with UNKNOWN stats (Long.MaxValue leaf
+    # Auto threshold (bytes, the Catalyst size estimate of the current
+    # frame, ``text.catalyst_size_bytes``). Calibrated on the A/Bs above:
+    # explode wins decisively at 0.18 GB, arrow ties-or-wins from 1.8 GB
+    # up, so the gate sits at 1 GiB — below it the explode plan's decisive
+    # small-input win rules; above it arrow never loses and frees JVM cores
+    # for the concurrent jobs. Frames with UNKNOWN stats (Long.MaxValue leaf
     # default, e.g. in-memory test frames) use explode: the safe plan
     # needs no Python workers.
     token_hist_arrow_min_bytes: int = 1 << 30
-    # Independent heavy jobs (violation write, fused sketch, token
-    # histogram) are submitted concurrently: overlapping them hides each
-    # job's serial driver/codegen latency — the Amdahl term that capped
-    # 8->32 scaling. None = concurrent (the measured default; see
-    # ``_resolve_pool_workers`` for the r5 sequential-vs-concurrent
-    # experiment that pinned this). An int pins the pool size
-    # (1 = strictly sequential jobs, useful for per-stage decomposition:
-    # sequential job walls don't include pool queueing).
-    max_concurrent_jobs: int | None = None
     engine: EngineConfig = field(default_factory=lambda: DEFAULT_CONFIG)
 
 
@@ -200,7 +189,6 @@ class ValidationRun:
         self.s = settings
         # resolved per run() from settings + Catalyst stats; safe default
         # for callers that drive _run_batch directly
-        self._arrow_hist = False
         self.token_hist_plan = "explode"
 
     # -- manifest -----------------------------------------------------------
@@ -226,8 +214,9 @@ class ValidationRun:
         part = s.partition_col
         # resolve the token-histogram physical plan once per run (auto mode
         # reads the Catalyst size estimate of the full current frame)
-        self._arrow_hist = self._resolve_token_hist_arrow()
-        self.token_hist_plan = "arrow" if self._arrow_hist else "explode"
+        self.token_hist_plan = (
+            "arrow" if self._resolve_token_hist_arrow() else "explode"
+        )
 
         raw_parts = [
             r[0]
@@ -269,41 +258,16 @@ class ValidationRun:
             wall_ms=wall_ms,
         )
 
-    # -- job concurrency ------------------------------------------------------
-
-    #: pool size when unpinned: violations write + fused sketch + token
-    #: histogram (3 heavy) with headroom for the non-fused 5-job shape
-    POOL_WORKERS_CONCURRENT = 6
-
-    def _resolve_pool_workers(self) -> int:
-        """Pool size for the batch's independent heavy jobs.
-
-        ``settings.max_concurrent_jobs`` pins it (1 = strictly sequential);
-        None = concurrent. Concurrent is the MEASURED default, not a guess:
-        an r5 hypothesis held that once input outgrew the heap the
-        overlapping working sets would thrash and sequential would win, so
-        the 32-core / 24g-heap sandbox ran the decisive pair on identical
-        25 GB (32M-row) input — concurrent pass 400s, strictly sequential
-        pass 891s (token_hist 677s after the violations job had filled the
-        heap vs 394s overlapped). Fresh-JVM per-stage decomposition
-        (scripts/diag_tokhist_scale.py) shows every stage scales linearly
-        16M->32M alone with negligible GC, i.e. the slowdown sequential
-        "avoids" doesn't come from the plan at all — it comes from running
-        late in a dirty JVM, which sequential ordering maximises.
-        Concurrency lets the heavy scans share the fresh heap instead.
-        """
-        if self.s.max_concurrent_jobs is not None:
-            return max(1, int(self.s.max_concurrent_jobs))
-        return self.POOL_WORKERS_CONCURRENT
+    # -- plan choice ----------------------------------------------------------
 
     def _resolve_token_hist_arrow(self) -> bool:
         """Pick the token-histogram physical plan (see settings docstring).
 
         ``settings.token_hist_arrow`` pins it; None = cost-based auto on the
-        CURRENT frame's Catalyst size estimate (free — no extra job), the
-        same statistic AQE's join planning reads. Unknown stats (leaf
-        default Long.MaxValue, e.g. in-memory test frames) resolve to the
-        explode plan: it needs no Python workers and wins every measured
+        CURRENT frame's Catalyst size estimate (``catalyst_size_bytes``:
+        free — no extra job), the same statistic AQE's join planning reads.
+        Unknown stats (e.g. in-memory test frames) resolve to the explode
+        plan: it needs no Python workers and wins every measured
         small-input pass. Resolved once per run and recorded as
         ``self.token_hist_plan`` so bench output can self-describe.
         """
@@ -312,18 +276,8 @@ class ValidationRun:
             return False  # sampling semantics are defined over exploded rows
         if s.token_hist_arrow is not None:
             return bool(s.token_hist_arrow)
-        try:
-            size = int(
-                self.current._jdf.queryExecution()
-                .optimizedPlan()
-                .stats()
-                .sizeInBytes()
-            )
-        except Exception:
-            return False
-        if size >= (1 << 62):  # stats unknown, not "huge"
-            return False
-        return size >= s.token_hist_arrow_min_bytes
+        size = catalyst_size_bytes(self.current)
+        return size is not None and size >= s.token_hist_arrow_min_bytes
 
     # -- one commit unit ----------------------------------------------------
 
@@ -344,11 +298,17 @@ class ValidationRun:
         # Eagerly counting each check's violations costs one Spark job per
         # check; instead all violation DataFrames union into ONE write, and
         # counts come back from the written parquet in one tiny
-        # partition-pruned read. The sketch-producing drift jobs are
-        # independent, so they are submitted CONCURRENTLY from a thread pool —
-        # the Spark scheduler interleaves their stages, hiding driver/codegen
-        # latency (per-job fixed cost is the Amdahl term that killed 8->32
-        # scaling efficiency otherwise).
+        # partition-pruned read. The three heavy jobs (violations write,
+        # n_tok sketch, token histogram) are independent, so they are
+        # submitted CONCURRENTLY from a thread pool — the Spark scheduler
+        # interleaves their stages, hiding driver/codegen latency (per-job
+        # fixed cost is the Amdahl term that killed 8->32 scaling efficiency
+        # otherwise). Concurrent is measured, not assumed: on identical
+        # 25 GB (32M-row) input at local[32] the concurrent pass took 400 s
+        # and a strictly sequential one 891 s (BASELINE.md "Round-5 32M
+        # probe"). Run late in a JVM whose heap the violations job had
+        # filled, the token histogram slowed from 394 s to 677 s, while
+        # every stage alone scales linearly 16M->32M with negligible GC.
         check_meta: dict[str, dict] = {}
 
         def lazy_check(res: C.CheckResult) -> DataFrame:
@@ -392,7 +352,11 @@ class ValidationRun:
             lazy_check(
                 C.row_invariant_check(
                     cur,
-                    f"{s.ntok_col} <=> size({s.tokens_col})",
+                    # size(NULL) is NULL with ANSI on but -1 with it off; the
+                    # explicit NULL branch keeps "both NULL" a pass in every
+                    # session
+                    f"if({s.tokens_col} IS NULL, {s.ntok_col} IS NULL, "
+                    f"{s.ntok_col} <=> size({s.tokens_col}))",
                     name="ntok_matches_size",
                     key_col=s.key_col,
                     partition_col=part,
@@ -478,15 +442,6 @@ class ValidationRun:
             }
             return counts
 
-        def job_profile():
-            return profile_columns(cur, [s.ntok_col], (part,), s.engine).toPandas()
-
-        def job_drift(fn, col):
-            # reference = BASELINE snapshot, production = CURRENT batch
-            # (matches the token-histogram path's (base, cur) order; PSI's
-            # quantile bin edges must come from the baseline distribution)
-            return fn(base, cur, col, (part,), config=s.engine)
-
         def job_token_hist():
             if not s.run_token_histogram:
                 return None
@@ -502,7 +457,7 @@ class ValidationRun:
                     [(p, i) for i, p in enumerate(batch)], [part, "_pcode"]
                 )
             )
-            if self._arrow_hist:
+            if self.token_hist_plan == "arrow":
                 # NO-EXPLODE plan (round 4): Arrow batches flatten+bincount
                 # in numpy, so the shuffle moves <= batches x groups x 256
                 # pre-aggregated rows instead of one row per token — this
@@ -547,72 +502,43 @@ class ValidationRun:
         def job_ntok_sketch():
             # one shared scan: the per-value sketch (nulls kept as a marker
             # row) feeds PSI+KS+JS *and* the column profile driver-side.
-            # Side order (base, cur): reference = baseline snapshot,
-            # production = current — same as job_drift / job_token_hist
+            # Side order (base, cur): reference = baseline snapshot (PSI's
+            # bin edges come from it), production = current — same as
+            # job_token_hist
             return D.per_value_sketch(
                 base, cur, s.ntok_col, (part,), keep_nulls=True
             ).toPandas()
 
         job_walls: dict[str, float] = {}
 
-        def timed(name, fn, *a):
+        def timed(name, fn):
             def run():
                 jt = time.monotonic()
                 try:
-                    return fn(*a)
+                    return fn()
                 finally:
                     job_walls[name] = round(time.monotonic() - jt, 2)
             return run
 
-        pool_workers = self._resolve_pool_workers()
-        job_walls["_pool_workers"] = pool_workers
-        with ThreadPoolExecutor(max_workers=pool_workers) as pool:
-            # submission order matters at max_workers=1: the violations
-            # write releases its memory before the sketch/histogram scans
-            fut_vio = pool.submit(timed("violations", job_violations))
-            if s.fused_ntok_drift:
-                # the sketch job replaces the standalone profile job too —
-                # profile stats are a function of the same per-value counts
-                fut_prof = None
-                fut_sketch = pool.submit(timed("ntok_sketch", job_ntok_sketch))
-                fut_psi = fut_ks = fut_js = None
-            else:
-                fut_prof = pool.submit(timed("profile", job_profile))
-                fut_psi = pool.submit(
-                    timed("psi", job_drift, D.psi_test_grouped, s.ntok_col)
-                )
-                fut_ks = pool.submit(
-                    timed("ks", job_drift, D.ks_test_grouped, s.ntok_col)
-                )
-                fut_js = pool.submit(
-                    timed("js", job_drift, D.js_test_grouped, s.ntok_col)
-                )
-            fut_tok = pool.submit(timed("token_hist", job_token_hist))
-
-            vio_counts = fut_vio.result()
-            if s.fused_ntok_drift:
-                sketch_pdf = fut_sketch.result()
-                # sketch sides are (base=ref, cur=prod); the profile
-                # describes the CURRENT batch, so it reads side="prod"
-                prof = D.profile_from_sketch(
-                    sketch_pdf, (part,), s.ntok_col, side="prod"
-                )
-                fused = D.fused_tests_from_sketch(
-                    sketch_pdf, (part,), s.ntok_col, s.engine
-                )
-                drift_frames = [
-                    ("psi", fused["psi"]),
-                    ("ks", fused["ks"]),
-                    ("jensen_shannon", fused["jensen_shannon"]),
-                ]
-            else:
-                prof = fut_prof.result()
-                drift_frames = [
-                    ("psi", fut_psi.result()),
-                    ("ks", fut_ks.result()),
-                    ("jensen_shannon", fut_js.result()),
-                ]
-            tok_counts_pdf = fut_tok.result()
+        jobs = {
+            "violations": job_violations,
+            "ntok_sketch": job_ntok_sketch,
+            "token_hist": job_token_hist,
+        }
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            futs = {name: pool.submit(timed(name, fn)) for name, fn in jobs.items()}
+            vio_counts = futs["violations"].result()
+            sketch_pdf = futs["ntok_sketch"].result()
+            # driver kernels run while the token histogram job is still
+            # going. Sketch sides are (base=ref, cur=prod); the profile
+            # describes the CURRENT batch, so it reads side="prod"
+            prof = D.profile_from_sketch(
+                sketch_pdf, (part,), s.ntok_col, side="prod"
+            )
+            fused = D.fused_tests_from_sketch(
+                sketch_pdf, (part,), s.ntok_col, s.engine
+            )
+            tok_counts_pdf = futs["token_hist"].result()
             # true span of the job pool (r5 fix: this used to be stamped
             # after the violations future alone, under-reporting the pool)
             job_walls["_pool_wall"] = round(time.monotonic() - tb, 2)
@@ -701,8 +627,8 @@ class ValidationRun:
                 )
             )
 
-        for test_name, frame in drift_frames:
-            self._record_drift(frame, test_name, batch_rows, now, part)
+        for test_name in ("psi", "ks", "jensen_shannon"):
+            self._record_drift(fused[test_name], test_name, batch_rows, now, part)
 
         if tok_counts_pdf is not None:
             extra = {

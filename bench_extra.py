@@ -42,10 +42,7 @@ HEADLINE = [
 
 
 def make_session(cores: int):
-    import bench
-
     # identical knobs to the frozen bench, plus the UI for stage metrics
-    b = bench.make_session.__wrapped__ if hasattr(bench.make_session, "__wrapped__") else None
     from pyspark.sql import SparkSession
 
     heap_gb = max(8, min(8 + cores // 2, 24))
@@ -93,7 +90,6 @@ def main() -> None:
     app_id = spark.sparkContext.applicationId
 
     walls: dict[str, float] = {}
-    stage_windows: dict[str, tuple[int, int]] = {}
     for name in names:
         # plan capture (cheap, pre-timing)
         df = qs[name](spark, SF_DIR)
@@ -104,7 +100,6 @@ def main() -> None:
             f.write(plan)
 
         best = float("inf")
-        first_stage = len(_stage_metrics(app_id))
         for i in range(REPEATS):
             spark.sparkContext.setJobDescription(f"{name}#{i}")
             t0 = time.monotonic()
@@ -113,7 +108,6 @@ def main() -> None:
             best = min(best, time.monotonic() - t0)
         spark.sparkContext.setJobDescription(None)
         walls[name] = round(best, 3)
-        stage_windows[name] = (first_stage, len(_stage_metrics(app_id)))
         print(f"  {name}: {best:.3f}s", file=sys.stderr)
 
     # dump per-stage metrics for offline inspection

@@ -188,3 +188,22 @@ def test_lm_empty_and_whitespace_docs_dropped(spark):
     df = _docs(spark, [(1, "a b c"), (2, "   "), (3, "")])
     out = lm_perplexity(df, "doc_id", "text")
     assert [r["doc_id"] for r in out.collect()] == [1]
+
+
+def test_lm_null_text_docs_add_nothing_with_ansi_off(spark):
+    # size(NULL) is NULL with ANSI on but -1 with it off: NULL-text
+    # documents must not shrink the corpus total (the unigram backoff
+    # denominator) in either session
+    df = _docs(spark, [(1, "a b c"), (2, None), (3, "a b d"), (4, None)])
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    out = {}
+    try:
+        for ansi in ("true", "false"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            total = train_ngram_lm(df, "text").total.first()["total_tokens"]
+            scores = sorted(lm_perplexity(df, "doc_id", "text").collect())
+            out[ansi] = (total, scores)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert out["true"][0] == 6
+    assert out["false"] == out["true"]

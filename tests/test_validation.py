@@ -480,34 +480,22 @@ class TestTokenHistPlanAuto:
         )._resolve_token_hist_arrow() is False
 
 
-class TestJobConcurrency:
-    """The adaptive job pool: sequential == concurrent results, and the
-    heap-budget downgrade fires exactly when input bytes exceed it."""
-
-    def test_sequential_jobs_identical_results(self, spark, tmp_path):
-        cur, base, dim, _exp = generate_token_tables(spark, n_rows=2000, seed=9)
-        reports = {}
-        for workers in (None, 1):
-            run = ValidationRun(
-                spark, cur, base, dim, str(tmp_path / f"c{workers}"),
-                settings=ValidationSettings(max_concurrent_jobs=workers),
-            )
-            reports[workers] = run.run(resume=False).results
-            assert run.last_job_walls["_pool_workers"] == (workers or 6)
-        a = reports[None].sort_values(["partition_value", "check_name", "feature"])
-        b = reports[1].sort_values(["partition_value", "check_name", "feature"])
-        assert list(a["check_name"]) == list(b["check_name"])
-        assert np.allclose(
-            a["score"].astype(float).to_numpy(),
-            b["score"].astype(float).to_numpy(),
-            rtol=0, atol=0, equal_nan=True,
-        )
-
-    def test_pool_resolution(self, spark, tmp_path):
-        cur, base, dim, _exp = generate_token_tables(spark, n_rows=500, seed=3)
-        run = ValidationRun(spark, cur, base, dim, str(tmp_path / "o1"))
-        assert run._resolve_pool_workers() == run.POOL_WORKERS_CONCURRENT
-        run.s = ValidationSettings(max_concurrent_jobs=3)
-        assert run._resolve_pool_workers() == 3
-        run.s = ValidationSettings(max_concurrent_jobs=0)  # clamps to 1
-        assert run._resolve_pool_workers() == 1
+class TestSessionConfigIndependence:
+    def test_violation_counts_same_with_ansi_off(self, spark, fixture_small, tmp_path):
+        # size(NULL) is NULL with ANSI on but -1 with it off: the planted
+        # rows whose tokens and n_tok are both NULL must pass the n_tok
+        # invariant in either session
+        cur, base, dim, exp = fixture_small
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        counts = {}
+        try:
+            for ansi in ("true", "false"):
+                spark.conf.set("spark.sql.ansi.enabled", ansi)
+                run = ValidationRun(
+                    spark, cur, base, dim, str(tmp_path / f"ansi_{ansi}")
+                )
+                counts[ansi] = run.run(resume=False).violation_counts
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+        assert counts["true"]["ntok_matches_size"] == exp.row_invariant
+        assert counts["false"] == counts["true"]
