@@ -56,7 +56,6 @@ class EngineConfig:
     # values (most physical measurements, prices, ids with reuse) on the
     # one-pass plan.
     sketch_collect_max_rows: int = 8_000_000
-    salt_buckets: int = 16            # salting fan-out for skewed aggregations
 
 
 DEFAULT_CONFIG = EngineConfig()

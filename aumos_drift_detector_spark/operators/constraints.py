@@ -3,8 +3,8 @@
 Each check returns a ``CheckResult`` whose ``violations`` DataFrame is lazy —
 the caller decides whether to count it, write it, or both in one action. All
 plans are declarative so Catalyst chooses physical strategies; the explicit
-scale decisions (broadcast the dim side, two-phase salted aggregation, hash
-prefilter before wide-payload joins) are documented per function.
+scale decisions (broadcast the dim side, one-shuffle uniqueness aggregation,
+hash prefilter before wide-payload joins) are documented per function.
 
 The reference has no relational joins — dict-key alignment plays that role
 (reference chi_squared.py:140-149 for category alignment, baseline_manager.py:325
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aumos_drift_detector_spark.config import DEFAULT_CONFIG, EngineConfig
+from aumos_drift_detector_spark.sources.tables import driver_frame
 
 
 @dataclass
@@ -56,32 +56,24 @@ def uniqueness_check(
     df: DataFrame,
     key_col: str,
     partition_col: str | None = None,
-    config: EngineConfig = DEFAULT_CONFIG,
     eager: bool = True,
 ) -> CheckResult:
-    """Duplicate-key detection via explicit two-phase (salted) aggregation.
+    """Duplicate-key detection: one ``groupBy(key)``, one shuffle.
 
-    Phase 1 counts per (key, salt) where the salt is derived from the physical
-    partition, so a hot key (bulk-duplicated doc_id — the adversarial case for
-    a uniqueness check) spreads over `salt_buckets` reducers instead of
-    funneling into one. Phase 2 sums the partial counts per key. For benign
-    high-cardinality keys this collapses to the same cost as a plain
-    groupBy (map-side partial aggregation), so the salt is pure insurance.
+    Map-side partial aggregation already collapses a hot key (bulk-duplicated
+    doc_id, the adversarial case for a uniqueness check) to one row per map
+    task, so the shuffle carries at most (map tasks) rows for it and the
+    final count is one sum over them; salting the key first would only add
+    a second shuffle. The ``uniqueness_lineitem`` contract query is the same
+    plan.
 
     Violations: one row per duplicated key with its multiplicity
     (reference analogue: unique_count, baseline_manager.py:325; J6).
     """
-    salt = F.pmod(F.abs(F.hash(F.spark_partition_id(), F.monotonically_increasing_id())),
-                  F.lit(config.salt_buckets)).alias("_salt")
     part = F.col(partition_col) if partition_col else F.lit(None).cast("string")
-    partial = (
-        df.select(F.col(key_col), salt, part.alias("_part"))
-        .groupBy(key_col, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"), F.first("_part").alias("_part"))
-    )
     dupes = (
-        partial.groupBy(key_col)
-        .agg(F.sum("_partial").alias("occurrences"), F.first("_part").alias("_part"))
+        df.groupBy(key_col)
+        .agg(F.count(F.lit(1)).alias("occurrences"), F.first(part).alias("_part"))
         .where(F.col("occurrences") > 1)
         .select(
             F.col("_part").alias("partition_value"),
@@ -213,8 +205,8 @@ def schema_check(df: DataFrame, expected: T.StructType) -> CheckResult:
     for name in actual:
         if name not in exp:
             problems.append(f"unexpected column {name}:{actual[name]}")
-    spark = df.sparkSession
-    violations = spark.createDataFrame(
+    violations = driver_frame(
+        df.sparkSession,
         [(None, None, p) for p in problems],
         T.StructType([
             T.StructField("partition_value", T.StringType()),

@@ -49,6 +49,7 @@ from aumos_drift_detector_spark.operators.profile import (
     bucket_by_edges,
     clean_values,
 )
+from aumos_drift_detector_spark.sources.tables import driver_frame
 
 _REF, _PROD = 0, 1
 
@@ -256,16 +257,6 @@ def _picked_quantiles(row, probs: np.ndarray, n: int) -> np.ndarray:
     return _lerp_quantiles(lo, hi, probs, n)
 
 
-def _driver_frame(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """A small driver-side table as a DataFrame. Going through pandas lets
-    Arrow (when the session enables it) ship it straight to the JVM; a
-    plain row list would start Python workers just to unpickle it. Object
-    columns keep NULL integer keys from turning into float NaN."""
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object), schema
-    )
-
-
 def _edge_probs(n_bins: int) -> np.ndarray:
     """The reference's ``np.percentile(ref, linspace(0, 100, k+1))`` levels."""
     return np.linspace(0.0, 1.0, n_bins + 1)
@@ -313,7 +304,7 @@ def quantile_edges_selection(
             T.StructField("ref_distinct", T.LongType()),
         ]
     )
-    return _driver_frame(ref_df.sparkSession, out_rows, schema)
+    return driver_frame(ref_df.sparkSession, out_rows, schema)
 
 
 def _sides(
@@ -689,7 +680,7 @@ def _psi_bin_counts(
             T.StructField("inner_edges", T.ArrayType(T.DoubleType())),
         ]
     )
-    edges_df = _driver_frame(
+    edges_df = driver_frame(
         sketch.sparkSession,
         [(*key, gi, edges[1:-1].tolist()) for gi, (_, key, edges) in enumerate(psi_rows)],
         schema,

@@ -3,7 +3,7 @@
 This is the engine's flagship job (BASELINE.json north_star): one batch pass
 over ``(doc_id, tokens, n_tok, source)`` that
 
-1. enforces schema, null-rate, uniqueness (salted two-phase agg), referential
+1. enforces schema, null-rate, uniqueness (one-shuffle agg), referential
    integrity (broadcast anti-join), the ``n_tok <=> size(tokens)`` row
    invariant, and token-array equality vs the baseline table (hash-prefiltered
    equi-join);
@@ -40,7 +40,10 @@ per-partition job loop — 10^4 partitions would mean 10^4 job launches;
 ``partition_batch_size`` trades commit granularity against job count);
 drift finalization handles groups x bins sketch rows driver-side. The token
 histogram pass explodes tokens; ``token_sample_fraction`` bounds it at scale
-(sampling is LOGGED in the results row — no silent caps).
+(sampling is LOGGED in the results row — no silent caps). The pass's own
+driver-built tables (partition codes, schema problems, results, manifest)
+go through ``driver_frame`` and its read-backs declare their schemas, so
+with Arrow on it starts no Python workers and runs no schema-inference jobs.
 """
 
 from __future__ import annotations
@@ -53,6 +56,7 @@ from datetime import datetime, timezone
 from typing import Sequence
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -63,6 +67,7 @@ from aumos_drift_detector_spark.operators import constraints as C
 from aumos_drift_detector_spark.operators import drift as D
 from aumos_drift_detector_spark.operators.text import catalyst_size_bytes
 from aumos_drift_detector_spark.sources.synth import TOKEN_SCHEMA
+from aumos_drift_detector_spark.sources.tables import driver_frame
 
 RESULTS_SCHEMA = T.StructType(
     [
@@ -191,13 +196,22 @@ class ValidationRun:
         # for callers that drive _run_batch directly
         self.token_hist_plan = "explode"
 
-    # -- manifest -----------------------------------------------------------
+    # -- output tables ------------------------------------------------------
+
+    def _read(self, table: str, schema: T.StructType) -> DataFrame:
+        """One of the pass's own output tables. The declared schema skips
+        Spark's footer-inference job, reads a table whose writes held no
+        rows as empty, and keeps ``partition_value`` a string whatever the
+        values look like."""
+        return self.spark.read.schema(schema).parquet(f"{self.out_dir}/{table}")
 
     def _completed_partitions(self) -> set[str]:
         try:
-            m = self.spark.read.parquet(f"{self.out_dir}/manifest")
-        except Exception:
-            return set()
+            m = self._read("manifest", MANIFEST_SCHEMA)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return set()  # no batch of any run has committed here yet
         rows = (
             m.where((F.col("run_id") == self.run_id) & (F.col("status") == "done"))
             .select("partition_value")
@@ -380,8 +394,7 @@ class ValidationRun:
                 1,
                 lazy_check(
                     C.uniqueness_check(
-                        self.current, s.key_col, partition_col=part,
-                        config=s.engine, eager=False,
+                        self.current, s.key_col, partition_col=part, eager=False,
                     )
                 ),
             )
@@ -417,26 +430,20 @@ class ValidationRun:
                 .partitionBy("run_id", "check_name", "partition_value")
                 .parquet(f"{self.out_dir}/violations")
             )
-            try:
-                written = (
-                    self.spark.read.parquet(f"{self.out_dir}/violations")
-                    .where(
-                        (F.col("run_id") == self.run_id)
-                        & F.col("check_name").isin(batch_checks)
-                        & (
-                            F.col("partition_value").isin(
-                                batch + ["__unattributed__"]
-                            )
-                            | F.lit(include_globals)  # globals span all partitions
-                        )
+            written = (
+                self._read("violations", VIOLATIONS_SCHEMA)
+                .where(
+                    (F.col("run_id") == self.run_id)
+                    & F.col("check_name").isin(batch_checks)
+                    & (
+                        F.col("partition_value").isin(batch + ["__unattributed__"])
+                        | F.lit(include_globals)  # globals span all partitions
                     )
-                    .groupBy("check_name", "partition_value")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .collect()
                 )
-            except Exception:
-                # zero violations ever written -> no partition dirs to infer
-                written = []
+                .groupBy("check_name", "partition_value")
+                .agg(F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
             counts: dict[tuple[str, str], int] = {
                 (r["check_name"], r["partition_value"]): r["n"] for r in written
             }
@@ -453,8 +460,13 @@ class ValidationRun:
             # (round-1 perf trap #6, applied to the hottest path); codes map
             # back to values in the tiny collected sketch
             code_df = F.broadcast(
-                self.spark.createDataFrame(
-                    [(p, i) for i, p in enumerate(batch)], [part, "_pcode"]
+                driver_frame(
+                    self.spark,
+                    [(p, i) for i, p in enumerate(batch)],
+                    T.StructType([
+                        self.current.schema[part],
+                        T.StructField("_pcode", T.LongType()),
+                    ]),
                 )
             )
             if self.token_hist_plan == "arrow":
@@ -649,7 +661,8 @@ class ValidationRun:
             )
 
         # ---- commit: results (idempotent) then manifest (commit record) ----
-        results_df = self.spark.createDataFrame(
+        results_df = driver_frame(
+            self.spark,
             [tuple(row[f.name] for f in RESULTS_SCHEMA.fields) for row in batch_rows],
             RESULTS_SCHEMA,
         )
@@ -679,7 +692,7 @@ class ValidationRun:
             )
             for p in batch
         ]
-        self.spark.createDataFrame(manifest_rows, MANIFEST_SCHEMA).write.mode(
+        driver_frame(self.spark, manifest_rows, MANIFEST_SCHEMA).write.mode(
             "append"
         ).parquet(f"{self.out_dir}/manifest")
         job_walls["_batch_wall"] = round(time.monotonic() - tb, 2)
@@ -697,16 +710,13 @@ class ValidationRun:
         attempt counts) makes the report reflect exactly what is on disk —
         including batches committed by a previous, killed attempt.
         """
-        try:
-            written = (
-                self.spark.read.parquet(f"{self.out_dir}/violations")
-                .where(F.col("run_id") == self.run_id)
-                .groupBy("check_name")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-        except Exception:
-            written = []
+        written = (
+            self._read("violations", VIOLATIONS_SCHEMA)
+            .where(F.col("run_id") == self.run_id)
+            .groupBy("check_name")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        )
         counts = {r["check_name"]: r["n"] for r in written}
         return {name: counts.get(name, 0) for name in CHECK_NAMES}
 

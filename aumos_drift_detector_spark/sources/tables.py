@@ -25,8 +25,39 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SEQUENCE_SCHEMA = "doc_id string, tokens array<int>, n_tok int, source string"
+
+
+def driver_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType
+) -> DataFrame:
+    """A small driver-built table as a DataFrame.
+
+    With ``spark.sql.execution.arrow.pyspark.enabled`` on, the rows reach
+    the JVM as one Arrow table and plan as a ``LocalTableScan`` (an empty
+    one for no rows), so no Python worker starts to unpickle them. The
+    Arrow columns are built from the Python values, not through pandas: a
+    float NaN stays NaN and a NULL integer stays NULL. Timestamps should be
+    timezone-aware; a naive one would be read as UTC here but as local time
+    by ``createDataFrame(rows)``. With Arrow off this is
+    ``createDataFrame(rows, schema)``.
+    """
+    arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
+    if arrow.lower() != "true":
+        return spark.createDataFrame(rows, schema)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    columns = [
+        pa.array([r[i] for r in rows], type=f.type)
+        for i, f in enumerate(arrow_schema)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(columns, schema=arrow_schema), schema
+    )
 
 
 class TableFormatUnavailable(RuntimeError):

@@ -46,6 +46,24 @@ class TestUniqueness:
         assert res.passed
         assert res.violation_count == 0
 
+    def test_hot_key_across_every_partition_counts_exactly(self, spark):
+        # one key in every input partition (the adversarial case for a
+        # uniqueness check): map-side partial counts must sum to the total
+        hot = spark.range(0, 4000, numPartitions=8).select(
+            F.when(F.col("id") % 2 == 0, F.lit("hot"))
+            .otherwise(F.concat(F.lit("k"), F.col("id").cast("string")))
+            .alias("doc_id"),
+            F.lit("web").alias("source"),
+        )
+        assert hot.rdd.getNumPartitions() == 8
+        res = constraints.uniqueness_check(hot, "doc_id", partition_col="source")
+        rows = res.violations.collect()
+        assert res.violation_count == 1
+        assert [(r["doc_id"], r["occurrences"], r["partition_value"]) for r in rows] == [
+            ("hot", 2000, "web")
+        ]
+        assert rows[0]["detail"] == "duplicate key x2000"
+
 
 class TestReferential:
     def test_orphan_sources(self, spark, token_fixture):

@@ -75,6 +75,17 @@ class TestJoinStrategies:
         assert "BroadcastHashJoin" in plan
         assert "LeftAnti" in plan
 
+    def test_uniqueness_aggregates_behind_one_exchange(self, spark, parquet_tables):
+        from aumos_drift_detector_spark.operators.constraints import uniqueness_check
+
+        fact = spark.read.parquet(f"{parquet_tables}/fact")
+        res = uniqueness_check(fact, "fk", partition_col="fk", eager=False)
+        plan = _plan(res.violations)
+        # partial count map-side, one shuffle on the key, final count
+        assert plan.count("Exchange") == 1, plan
+        assert "Exchange hashpartitioning(fk#" in plan
+        assert len(res.violations.collect()) == 4
+
     def test_token_equality_shuffles_hashes_not_payloads(
         self, spark, tmp_path
     ):
@@ -280,3 +291,40 @@ class TestTokenFamilyPlans:
 
         assert not re.search(r"\bIN(SET)?\b.*window</w>", plan)
         assert "value</w>, " not in plan.split("LocalTableScan")[0]
+
+
+class TestValidationPassDriverFrames:
+    def test_driver_built_frames_are_local_scans(self, spark, tmp_path, monkeypatch):
+        """With Arrow on, the pass's driver-built tables (partition codes,
+        schema problems, results, manifest) plan as local scans: no
+        ``Scan ExistingRDD``, whose Python workers unpickle row lists."""
+        from aumos_drift_detector_spark.operators import constraints
+        from aumos_drift_detector_spark.plans import validation
+        from aumos_drift_detector_spark.sources.synth import generate_token_tables
+        from aumos_drift_detector_spark.sources.tables import driver_frame
+
+        assert spark.conf.get("spark.sql.execution.arrow.pyspark.enabled") == "true"
+        frames = []
+
+        def recording(*args):
+            df = driver_frame(*args)
+            frames.append(df)
+            return df
+
+        monkeypatch.setattr(validation, "driver_frame", recording)
+        monkeypatch.setattr(constraints, "driver_frame", recording)
+        cur, base, dim, _ = generate_token_tables(spark, n_rows=1500, seed=3)
+        validation.ValidationRun(
+            spark, cur, base, dim, str(tmp_path / "out"), run_id="frames"
+        ).run()
+        names = sorted(tuple(df.columns[:2]) for df in frames)
+        assert names == [
+            ("partition_value", "doc_id"),  # schema problems (none here)
+            ("run_id", "partition_value"),  # results
+            ("run_id", "partition_value"),  # manifest
+            ("source", "_pcode"),  # partition codes
+        ]
+        for df in frames:
+            plan = _plan(df)
+            assert "ExistingRDD" not in plan, plan
+            assert "LocalTableScan" in plan, plan

@@ -1,10 +1,14 @@
 """Table-source abstraction: parquet path, partition pruning, iceberg gating."""
 
+from datetime import datetime, timezone
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aumos_drift_detector_spark.sources.tables import (
     TableFormatUnavailable,
+    driver_frame,
     read_sequences,
     write_sequences,
 )
@@ -125,3 +129,43 @@ class TestSynthResumeValidation:
         with pytest.raises(ValueError, match="different parameters"):
             fast_token_parquet(out, 2000, seed=3, drifted=True,
                                rows_per_file=1000)
+
+
+class TestDriverFrame:
+    SCHEMA = T.StructType(
+        [
+            T.StructField("key", T.StringType()),
+            T.StructField("n", T.LongType()),
+            T.StructField("score", T.DoubleType()),
+            T.StructField("edges", T.ArrayType(T.DoubleType())),
+            T.StructField("details", T.MapType(T.StringType(), T.StringType())),
+            T.StructField("at", T.TimestampType()),
+        ]
+    )
+    ROWS = [
+        ("a", 1, float("nan"), [0.0, float("nan")], {"k": "v"},
+         datetime(2026, 1, 2, 3, 4, 5, 678901, tzinfo=timezone.utc)),
+        (None, None, None, None, None, None),
+        ("c", -3, float("inf"), [], {}, datetime(1999, 12, 31, tzinfo=timezone.utc)),
+        ("d", 2**40, float("-inf"), [float("-inf"), 1.5], {"x": None}, None),
+    ]
+
+    @pytest.fixture(params=["true", "false"], ids=["arrow", "no_arrow"])
+    def arrow(self, spark, request):
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        before = spark.conf.get(key)
+        spark.conf.set(key, request.param)
+        yield request.param == "true"
+        spark.conf.set(key, before)
+
+    @pytest.mark.parametrize("n_rows", [4, 0])
+    def test_round_trips_like_create_dataframe(self, spark, arrow, n_rows):
+        rows = self.ROWS[:n_rows]
+        got = driver_frame(spark, rows, self.SCHEMA)
+        want = spark.createDataFrame(rows, self.SCHEMA)
+        assert got.schema == want.schema
+        # repr: NaN == NaN there, and float vs int or NULL vs NaN still differ
+        assert repr(got.collect()) == repr(want.collect())
+        if arrow:
+            plan = got._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan

@@ -142,6 +142,9 @@ class TestDriftedVariant:
             settings=ValidationSettings(run_token_histogram=False),
         )
         report = run.run()  # must not raise
+        # no check fires on the clean rows: the batch wrote an empty
+        # violations table, which both read-backs count as zero
+        assert set(report.violation_counts.values()) == {0}
         res = report.results
         npk = res[res["check_name"] == "null_partition_key"]
         assert len(npk) == 1
@@ -150,6 +153,44 @@ class TestDriftedVariant:
         assert npk["severity"].iloc[0] == "critical"
         # real partitions still validated normally
         assert (res[res["check_name"] == "profile"]["partition_value"] != "").any()
+
+
+class TestNumericPartitionValues:
+    def test_numeric_partition_values_keep_per_partition_verdicts(
+        self, spark, tmp_path
+    ):
+        """Partition values that look like integers ("101") must stay
+        strings on read-back: inferred as int, the batch's IN-filter failed
+        to cast '__unattributed__' and every per-partition count read 0."""
+        cur, base, dim, exp = generate_token_tables(spark, n_rows=1500, seed=42)
+        codes = {"web": "101", "books": "102", "code": "103", "wiki": "104",
+                 "orphan_src": "199"}
+        code_of = F.create_map(*[F.lit(x) for kv in codes.items() for x in kv])
+
+        def recode(df):
+            return df.withColumn("source", code_of[F.col("source")])
+
+        run = ValidationRun(
+            spark, recode(cur), recode(base), recode(dim), str(tmp_path / "out"),
+            settings=ValidationSettings(run_token_histogram=False),
+        )
+        report = run.run()
+        res = report.results
+        assert sorted(report.partitions) == sorted(codes.values())
+        for check, n in (
+            ("referential", exp.referential),
+            ("ntok_matches_size", exp.row_invariant),
+            ("token_equality", exp.token_equality),
+        ):
+            rows = res[res["check_name"] == check]
+            assert rows["score"].sum() == n == report.violation_counts[check], check
+        orphan = res[
+            (res["check_name"] == "referential") & (res["partition_value"] == "199")
+        ].iloc[0]
+        assert orphan["score"] == exp.referential
+        assert orphan["severity"] == "critical"
+        vio = spark.read.parquet(f"{tmp_path}/out/violations")
+        assert vio.where(F.col("check_name") == "referential").count() == exp.referential
 
 
 class TestKillSafeResume:
