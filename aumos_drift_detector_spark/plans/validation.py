@@ -43,7 +43,7 @@ histogram pass explodes tokens; ``token_sample_fraction`` bounds it at scale
 (sampling is LOGGED in the results row — no silent caps). The pass's own
 driver-built tables (partition codes, schema problems, results, manifest)
 go through ``driver_frame`` and its read-backs declare their schemas, so
-with Arrow on it starts no Python workers and runs no schema-inference jobs.
+it starts no Python workers and runs no schema-inference jobs.
 """
 
 from __future__ import annotations

@@ -35,24 +35,22 @@ def driver_frame(
 ) -> DataFrame:
     """A small driver-built table as a DataFrame.
 
-    With ``spark.sql.execution.arrow.pyspark.enabled`` on, the rows reach
-    the JVM as one Arrow table and plan as a ``LocalTableScan`` (an empty
-    one for no rows), so no Python worker starts to unpickle them. The
-    Arrow columns are built from the Python values, not through pandas: a
-    float NaN stays NaN and a NULL integer stays NULL. Timestamps should be
-    timezone-aware; a naive one would be read as UTC here but as local time
-    by ``createDataFrame(rows)``. With Arrow off this is
-    ``createDataFrame(rows, schema)``.
+    The rows reach the JVM as one Arrow table and plan as a
+    ``LocalTableScan`` (an empty one for no rows), so no Python worker
+    starts to unpickle them, whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says. Values are first
+    converted as ``createDataFrame(rows, schema)`` converts them, then the
+    Arrow columns are built from those values, not through pandas: a float
+    NaN stays NaN, a NULL integer stays NULL, and a naive datetime is read
+    in the Python process's local time zone, as ``collect()`` returns it.
     """
-    arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-    if arrow.lower() != "true":
-        return spark.createDataFrame(rows, schema)
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow_schema = to_arrow_schema(schema)
+    internal = [schema.toInternal(r) for r in rows]
     columns = [
-        pa.array([r[i] for r in rows], type=f.type)
+        pa.array([r[i] for r in internal], type=f.type)
         for i, f in enumerate(arrow_schema)
     ]
     return spark.createDataFrame(

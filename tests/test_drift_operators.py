@@ -970,8 +970,8 @@ class TestAdaptiveSketchPlans:
 
     def test_overcap_psi_null_int_group_key_without_arrow(self, spark):
         """The over-cap edge table must carry a NULL integer group key
-        through the non-Arrow createDataFrame path too (pandas would turn
-        the key column into float NaN, which IntegerType rejects)."""
+        with Arrow off too (pandas would turn the key column into float
+        NaN, which IntegerType rejects)."""
         from aumos_drift_detector_spark.config import EngineConfig
 
         rng = np.random.default_rng(1)

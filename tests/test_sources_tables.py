@@ -1,5 +1,7 @@
 """Table-source abstraction: parquet path, partition pruning, iceberg gating."""
 
+import os
+import time
 from datetime import datetime, timezone
 
 import pytest
@@ -148,6 +150,8 @@ class TestDriverFrame:
         (None, None, None, None, None, None),
         ("c", -3, float("inf"), [], {}, datetime(1999, 12, 31, tzinfo=timezone.utc)),
         ("d", 2**40, float("-inf"), [float("-inf"), 1.5], {"x": None}, None),
+        # naive, as collect() returns a timestamp group key
+        ("e", 0, 0.5, [0.5], {"y": "z"}, datetime(2026, 3, 8, 12, 30, 15)),
     ]
 
     @pytest.fixture(params=["true", "false"], ids=["arrow", "no_arrow"])
@@ -155,17 +159,31 @@ class TestDriverFrame:
         key = "spark.sql.execution.arrow.pyspark.enabled"
         before = spark.conf.get(key)
         spark.conf.set(key, request.param)
-        yield request.param == "true"
+        yield
         spark.conf.set(key, before)
 
-    @pytest.mark.parametrize("n_rows", [4, 0])
-    def test_round_trips_like_create_dataframe(self, spark, arrow, n_rows):
+    @pytest.fixture(params=["UTC", "America/New_York"])
+    def local_tz(self, request):
+        """The local time zone of this Python process: in a non-UTC one, a
+        naive datetime read as UTC would not match."""
+        before = os.environ.get("TZ")
+        os.environ["TZ"] = request.param
+        time.tzset()
+        yield
+        if before is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = before
+        time.tzset()
+
+    @pytest.mark.parametrize("n_rows", [5, 0])
+    def test_round_trips_like_create_dataframe(self, spark, arrow, local_tz, n_rows):
         rows = self.ROWS[:n_rows]
         got = driver_frame(spark, rows, self.SCHEMA)
         want = spark.createDataFrame(rows, self.SCHEMA)
         assert got.schema == want.schema
         # repr: NaN == NaN there, and float vs int or NULL vs NaN still differ
         assert repr(got.collect()) == repr(want.collect())
-        if arrow:
-            plan = got._jdf.queryExecution().executedPlan().toString()
-            assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        # one plan whatever the Arrow conf says
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
