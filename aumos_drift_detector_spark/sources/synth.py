@@ -137,46 +137,6 @@ def generate_token_tables(
     return to_sdf(cur_pdf), to_sdf(base_pdf), sources_dim, PlantedExpectations()
 
 
-def write_token_tables_parquet(
-    spark: SparkSession,
-    out_dir: str,
-    n_rows: int = 1_000_000,
-    seed: int = 42,
-    drifted: bool = False,
-    chunk_rows: int = 250_000,
-) -> None:
-    """Materialize current/baseline/sources_dim parquet for bench runs.
-
-    Writes in deterministic chunks (chunk seed = seed*100_003 + chunk index)
-    so large tables build without holding everything in driver memory;
-    current/baseline stay row-aligned per chunk. Partitioned by `source` —
-    the engine's partition column at scale.
-    """
-    import os
-
-    n_chunks = (n_rows + chunk_rows - 1) // chunk_rows
-    for ci in range(n_chunks):
-        rows = min(chunk_rows, n_rows - ci * chunk_rows)
-        cur, base, dim, _ = generate_token_tables(
-            spark,
-            rows,
-            seed=seed * 100_003 + ci,
-            plant_violations=(ci == 0),  # exact planted counts once per table
-            drifted=drifted,
-        )
-        # re-prefix doc ids per chunk to keep global uniqueness
-        from pyspark.sql import functions as F
-
-        prefix = F.lit(f"c{ci:04d}_")
-        cur = cur.withColumn("doc_id", F.concat(prefix, F.col("doc_id")))
-        base = base.withColumn("doc_id", F.concat(prefix, F.col("doc_id")))
-        mode = "overwrite" if ci == 0 else "append"
-        cur.write.mode(mode).partitionBy("source").parquet(os.path.join(out_dir, "tokens_current"))
-        base.write.mode(mode).partitionBy("source").parquet(os.path.join(out_dir, "tokens_baseline"))
-        if ci == 0:
-            dim.write.mode("overwrite").parquet(os.path.join(out_dir, "sources_dim"))
-
-
 def _token_file_task(args: tuple) -> int:
     """Generate ONE deterministic token parquet file (worker for
     ``fast_token_parquet``; module-level for multiprocessing pickling).

@@ -1,19 +1,10 @@
-"""Tests for alert gating, LIME importance, and the custom-check registry."""
+"""Tests for alert gating."""
 
 from datetime import datetime, timedelta, timezone
 
-import numpy as np
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from aumos_drift_detector_spark.functions.registry import (
-    register_check,
-    registered_checks,
-    run_custom_check,
-    unregister_check,
-)
-from aumos_drift_detector_spark.operators import alerts, importance
+from aumos_drift_detector_spark.operators import alerts
 
 
 class TestAlertGating:
@@ -87,130 +78,3 @@ class TestAlertGating:
         assert fired[("jensen_shannon", 0.1000001)] is True
         assert fired[("wasserstein", 0.1)] is False
         assert fired[("hellinger", 0.15)] is True
-
-
-class TestLime:
-    def test_shifted_feature_gets_weight(self, spark):
-        rng = np.random.default_rng(0)
-        ref = spark.createDataFrame(
-            pd.DataFrame({"a": rng.normal(0, 1, 3000), "b": rng.normal(5, 2, 3000)})
-        )
-        prod = spark.createDataFrame(
-            pd.DataFrame({"a": rng.normal(3, 1, 3000), "b": rng.normal(5, 2, 3000)})
-        )
-        w = importance.lime_weights(ref, prod, ["a", "b"])
-        assert w["a"] > 1.0       # ~3 sigma shift
-        assert w["b"] < 0.5       # unshifted
-        # deterministic (seeded)
-        w2 = importance.lime_weights(ref, prod, ["a", "b"])
-        assert w == w2
-
-    def test_rank_features(self, spark):
-        df = spark.createDataFrame(
-            [("a", 3.0), ("b", 1.0), ("c", 6.0)], ["feature", "score"]
-        )
-        out = importance.rank_features(df).toPandas().set_index("feature")
-        assert out.loc["c", "rank"] == 1
-        assert out.loc["a", "contribution_pct"] == pytest.approx(0.3)
-
-
-class TestRegistry:
-    def test_sample_check_roundtrip(self, spark, value_df_factory):
-        def mean_gap(ref, prod):
-            gap = abs(float(np.mean(prod)) - float(np.mean(ref)))
-            return {"score": gap, "threshold": 0.5, "is_drifted": gap > 0.5,
-                    "extra": "info"}
-
-        register_check("mean_gap", mean_gap)
-        try:
-            assert registered_checks()["mean_gap"] == "sample"
-            rng = np.random.default_rng(1)
-            v = run_custom_check(
-                "mean_gap",
-                value_df_factory(rng.normal(0, 1, 3000)),
-                value_df_factory(rng.normal(2, 1, 3000)),
-                "value",
-            )
-            assert v.is_drifted
-            assert 1.5 < v.score < 2.5
-            assert v.details["extra"] == "info"
-            assert v.details["sample_cap"] == 10_000
-        finally:
-            unregister_check("mean_gap")
-
-    def test_sketch_check(self, spark, value_df_factory):
-        def l1_hist(rc, pc):
-            p, q = rc / rc.sum(), pc / pc.sum()
-            score = float(np.abs(p - q).sum()) / 2
-            return {"score": score, "threshold": 0.2, "is_drifted": score > 0.2}
-
-        register_check("l1_hist", l1_hist, kind="sketch")
-        try:
-            rng = np.random.default_rng(2)
-            same = run_custom_check(
-                "l1_hist",
-                value_df_factory(rng.normal(0, 1, 4000)),
-                value_df_factory(rng.normal(0, 1, 4000)),
-                "value",
-            )
-            assert not same.is_drifted
-            shifted = run_custom_check(
-                "l1_hist",
-                value_df_factory(rng.normal(0, 1, 2000)),
-                value_df_factory(rng.normal(4, 1, 2000)),
-                "value",
-            )
-            assert shifted.is_drifted
-        finally:
-            unregister_check("l1_hist")
-
-    def test_unknown_check_raises(self, spark, value_df_factory):
-        with pytest.raises(KeyError):
-            run_custom_check("nope", value_df_factory([1.0]), value_df_factory([1.0]), "value")
-
-    def test_hanging_check_times_out_cleanly(self, spark, value_df_factory):
-        """A deliberately hanging user check must fail with
-        CheckTimeoutError at the deadline, not hang the engine
-        (reference plugin_sandbox.py:23-40 parity)."""
-        import time as _time
-
-        from aumos_drift_detector_spark.functions.registry import (
-            CheckTimeoutError,
-        )
-
-        def hangs(ref, prod):
-            _time.sleep(300)
-            return {"score": 0.0, "threshold": 1.0, "is_drifted": False}
-
-        register_check("hangs", hangs)
-        try:
-            t0 = _time.monotonic()
-            with pytest.raises(CheckTimeoutError, match="deadline"):
-                run_custom_check(
-                    "hangs",
-                    value_df_factory([1.0, 2.0]),
-                    value_df_factory([1.0, 2.0]),
-                    "value",
-                    check_timeout=1.0,
-                )
-            assert _time.monotonic() - t0 < 30  # failed at ~1s, not 300s
-        finally:
-            unregister_check("hangs")
-
-    def test_check_errors_propagate_through_deadline_wrapper(
-        self, spark, value_df_factory
-    ):
-        def broken(ref, prod):
-            raise RuntimeError("bad plugin")
-
-        register_check("broken", broken)
-        try:
-            with pytest.raises(RuntimeError, match="bad plugin"):
-                run_custom_check(
-                    "broken",
-                    value_df_factory([1.0, 2.0]),
-                    value_df_factory([1.0, 2.0]),
-                    "value",
-                )
-        finally:
-            unregister_check("broken")

@@ -1,11 +1,11 @@
-"""Tests for dedup, similarity-search, text-analysis, and multimodal operators."""
+"""Tests for dedup, embedding near-dup, text-analysis and PII operators."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aumos_drift_detector_spark.operators import dedup, multimodal, similarity, text
+from aumos_drift_detector_spark.operators import dedup, text
 
 
 @pytest.fixture(scope="module")
@@ -353,42 +353,6 @@ class TestEmbeddingNearDup:
         assert (pairs["cosine"] >= 0.95).all()
 
 
-class TestSimilarity:
-    @pytest.fixture(scope="class")
-    def emb_df(self, spark):
-        rng = np.random.default_rng(1)
-        vecs = rng.normal(size=(200, 16)).astype(np.float64)
-        rows = [(int(i), vecs[i].tolist()) for i in range(200)]
-        return spark.createDataFrame(rows, ["vec_id", "embedding"]).cache(), vecs
-
-    def test_brute_force_matches_numpy(self, spark, emb_df):
-        df, vecs = emb_df
-        q = vecs[0]
-        got = similarity.cosine_topk(df, "embedding", q.tolist(), k=5).toPandas()
-        sims = (vecs @ q) / (np.linalg.norm(vecs, axis=1) * np.linalg.norm(q))
-        expected = np.argsort(-sims)[:5].tolist()
-        assert got["vec_id"].tolist() == expected
-
-    def test_batch_topk_matches_brute_force(self, spark, emb_df):
-        df, vecs = emb_df
-        queries = vecs[:3]
-        got = similarity.cosine_topk_batch(df, "embedding", queries, k=5).toPandas()
-        for qi in range(3):
-            sims = (vecs @ vecs[qi]) / (
-                np.linalg.norm(vecs, axis=1) * np.linalg.norm(vecs[qi])
-            )
-            expected = set(np.argsort(-sims)[:5].tolist())
-            got_ids = set(got[got["query_idx"] == qi]["vec_id"].tolist())
-            assert got_ids == expected
-
-    def test_ivf_recall_contains_query_itself(self, spark, emb_df):
-        df, vecs = emb_df
-        got = similarity.ivf_topk(
-            df, "embedding", vecs[7].tolist(), k=3, n_cells=8, n_probe=3
-        ).toPandas()
-        assert got["vec_id"].iloc[0] == 7  # self is always in probed cell
-
-
 class TestTextAnalysis:
     def test_heavy_hitters_exact_and_tiebreak(self, spark):
         df = spark.createDataFrame(
@@ -447,323 +411,6 @@ class TestTextAnalysis:
         assert m.loc["d1", "md5"] != m.loc["d3", "md5"]
 
 
-class TestMultimodal:
-    def test_feature_extraction_plumbing(self, spark):
-        media = multimodal.synth_media_table(spark, n_rows=12)
-        feats = multimodal.extract_features(media).toPandas()
-        assert len(feats) == 12
-        assert all(len(f) == 3 for f in feats["feature"])
-        assert ((feats["feat_mean"] >= 0) & (feats["feat_mean"] <= 1)).all()
-        # deterministic: same payload -> same features
-        feats2 = multimodal.extract_features(media).toPandas()
-        pd.testing.assert_frame_equal(
-            feats.sort_values("doc_id").reset_index(drop=True),
-            feats2.sort_values("doc_id").reset_index(drop=True),
-        )
-
-    def test_compressed_codecs_gated(self):
-        with pytest.raises(multimodal.DecoderUnavailable):
-            multimodal.decode_image_real(b"\xff\xd8\xff\xe0JFIF")  # truncated JPEG
-        with pytest.raises(multimodal.DecoderUnavailable):
-            multimodal.decode_image_real(b"\x89PNG\r\n")  # truncated signature
-
-    def test_png_roundtrip_all_filters(self):
-        """RFC 2083 decode: filter-0 scanlines ARE the raw pixels (ground
-        truth for the chunk/zlib path); filters 1-4 and the mixed cycle
-        verify each reversal against the independently-implemented forward
-        filters in encode_png."""
-        rng = np.random.default_rng(9)
-        img = rng.integers(0, 256, size=(23, 17, 3), dtype=np.uint8)
-        for ft in [0, 1, 2, 3, 4, "mixed"]:
-            got = multimodal.decode_image_real(
-                multimodal.encode_png(img, filter_type=ft)
-            )
-            np.testing.assert_array_equal(got, img)
-
-    def test_png_gradient_favors_nontrivial_predictors(self):
-        # smooth gradients make Sub/Average/Paeth predictions non-zero
-        # almost everywhere — a reversal bug cannot cancel out
-        y, x = np.mgrid[0:31, 0:29]
-        img = np.stack(
-            [(y * 7) % 256, (x * 5) % 256, (y * 3 + x * 2) % 256], axis=2
-        ).astype(np.uint8)
-        for ft in [1, 3, 4]:
-            got = multimodal.decode_image_real(
-                multimodal.encode_png(img, filter_type=ft)
-            )
-            np.testing.assert_array_equal(got, img)
-
-    def test_png_gray_and_unsupported_variants(self):
-        rng = np.random.default_rng(10)
-        g = rng.integers(0, 256, size=(9, 11), dtype=np.uint8)
-        got = multimodal.decode_image_real(
-            multimodal.encode_png(g, filter_type="mixed", color="gray")
-        )
-        assert got.shape == (9, 11, 3)
-        np.testing.assert_array_equal(got[:, :, 0], g)
-        np.testing.assert_array_equal(got[:, :, 1], g)
-        # 16-bit depth stays honestly gated
-        import struct
-        import zlib
-
-        def chunk(ct, data):
-            return (
-                struct.pack(">I", len(data)) + ct + data
-                + struct.pack(">I", zlib.crc32(ct + data) & 0xFFFFFFFF)
-            )
-
-        deep = (
-            multimodal._PNG_SIGNATURE
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 26))
-            + chunk(b"IEND", b"")
-        )
-        with pytest.raises(multimodal.DecoderUnavailable, match="8-bit"):
-            multimodal.decode_image_real(deep)
-
-    def test_png_malformed_payloads_raise_decoder_unavailable(self):
-        """Malformed chunks must surface as DecoderUnavailable (the error
-        type every decoder signals and batch callers catch), never raw
-        struct.error / zlib.error / numpy IndexError."""
-        import struct
-        import zlib
-
-        def chunk(ct, data):
-            return (
-                struct.pack(">I", len(data)) + ct + data
-                + struct.pack(">I", zlib.crc32(ct + data) & 0xFFFFFFFF)
-            )
-
-        sig = multimodal._PNG_SIGNATURE
-        ihdr_rgb = chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 1, 8, 2, 0, 0, 0))
-        # truncated IHDR (8 of 13 bytes)
-        short = sig + chunk(b"IHDR", b"\x00" * 8) + chunk(
-            b"IDAT", zlib.compress(b"\x00" * 7)) + chunk(b"IEND", b"")
-        with pytest.raises(multimodal.DecoderUnavailable, match="IHDR"):
-            multimodal.decode_image_real(short)
-        # PLTE length not a multiple of 3
-        ihdr_pal = chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 1, 8, 3, 0, 0, 0))
-        ragged = sig + ihdr_pal + chunk(b"PLTE", b"\x00" * 4) + chunk(
-            b"IDAT", zlib.compress(b"\x00\x00\x01")) + chunk(b"IEND", b"")
-        with pytest.raises(multimodal.DecoderUnavailable, match="PLTE"):
-            multimodal.decode_image_real(ragged)
-        # corrupt IDAT deflate stream
-        corrupt = sig + ihdr_rgb + chunk(b"IDAT", b"\xde\xad\xbe\xef\x00" * 3
-                                         ) + chunk(b"IEND", b"")
-        with pytest.raises(multimodal.DecoderUnavailable, match="IDAT"):
-            multimodal.decode_image_real(corrupt)
-        # palette index beyond PLTE entry count
-        oob = sig + ihdr_pal + chunk(b"PLTE", b"\x10\x20\x30\x40\x50\x60"
-                                     ) + chunk(
-            b"IDAT", zlib.compress(b"\x00\x05\x01")) + chunk(b"IEND", b"")
-        with pytest.raises(multimodal.DecoderUnavailable, match="palette"):
-            multimodal.decode_image_real(oob)
-        # in-range palette lookups still decode (guard is not over-broad)
-        okpl = sig + ihdr_pal + chunk(b"PLTE", b"\x10\x20\x30\x40\x50\x60"
-                                      ) + chunk(
-            b"IDAT", zlib.compress(b"\x00\x01\x00")) + chunk(b"IEND", b"")
-        got = multimodal.decode_image_real(okpl)
-        np.testing.assert_array_equal(
-            got, np.array([[[0x40, 0x50, 0x60], [0x10, 0x20, 0x30]]], np.uint8)
-        )
-
-    def test_png_feature_extraction_end_to_end(self, spark):
-        """extract_features over REAL PNG payloads — decode inside the
-        mapInPandas batch is the genuine zlib+filter path."""
-        rng = np.random.default_rng(11)
-        rows = []
-        for k in range(4):
-            img = rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8)
-            rows.append(
-                (f"p{k}", "image",
-                 bytearray(multimodal.encode_png(img, filter_type="mixed")),
-                 (16, 12, None, None, "png"))
-            )
-        media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        feats = (
-            multimodal.extract_features(media, use_fake_decoder=False)
-            .toPandas()
-            .sort_values("doc_id")
-        )
-        assert len(feats) == 4
-        assert ((feats["feat_mean"] >= 0) & (feats["feat_mean"] <= 1)).all()
-
-    def test_jpeg_roundtrip_flat_and_gradient(self):
-        """Baseline JPEG (T.81, Annex K tables): flat color is lossless at
-        q=95 (every AC coefficient is 0); smooth gradients bound the DCT
-        quantization error; both subsampling modes exercise the MCU
-        interleave + chroma upsample paths."""
-        from aumos_drift_detector_spark.operators import jpeg
-
-        flat = np.full((16, 24, 3), [200, 64, 140], dtype=np.uint8)
-        got = jpeg.decode_jpeg(jpeg.encode_jpeg(flat, quality=95))
-        np.testing.assert_array_equal(got, flat)
-
-        y, x = np.mgrid[0:33, 0:41]  # odd dims: non-MCU-aligned crop
-        grad = np.stack(
-            [(y * 3) % 256, (x * 2 + 40) % 256, ((x + y) * 2) % 256], axis=2
-        ).astype(np.uint8)
-        for ss, tol in [("4:4:4", 4), ("4:2:0", 8)]:
-            out = jpeg.decode_jpeg(jpeg.encode_jpeg(grad, 95, subsampling=ss))
-            assert out.shape == grad.shape
-            err = np.abs(out.astype(int) - grad.astype(int))
-            assert err.max() <= tol, (ss, err.max())
-
-    def test_jpeg_noise_statistics_survive(self):
-        """q=90 on dense noise: exercises long Huffman codes, ZRL runs and
-        byte stuffing; the reconstruction must track the source closely."""
-        from aumos_drift_detector_spark.operators import jpeg
-
-        rng = np.random.default_rng(3)
-        img = rng.integers(0, 256, (24, 24, 3), dtype=np.uint8)
-        out = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality=90))
-        corr = np.corrcoef(img.ravel().astype(float), out.ravel().astype(float))
-        assert corr[0, 1] > 0.98
-        # deterministic codec: same input -> same bytes
-        assert jpeg.encode_jpeg(img, 90) == jpeg.encode_jpeg(img, 90)
-
-    def test_jpeg_grayscale_single_component(self):
-        from aumos_drift_detector_spark.operators import jpeg
-
-        y, x = np.mgrid[0:13, 0:11]
-        g = ((y * 9 + x * 5) % 256).astype(np.uint8)
-        out = jpeg.decode_jpeg(jpeg.encode_jpeg(g, 95, subsampling="gray"))
-        assert out.shape == (13, 11, 3)
-        err = np.abs(out[:, :, 0].astype(int) - g.astype(int))
-        assert err.max() <= 4
-        np.testing.assert_array_equal(out[:, :, 0], out[:, :, 1])  # broadcast
-
-    def test_jpeg_nonbaseline_and_malformed_gated(self):
-        from aumos_drift_detector_spark.operators import jpeg
-
-        img = np.zeros((8, 8, 3), dtype=np.uint8)
-        payload = jpeg.encode_jpeg(img, 90)
-        # flip SOF0 -> SOF2 (progressive): must gate, not misdecode
-        prog = payload.replace(b"\xff\xc0", b"\xff\xc2", 1)
-        with pytest.raises(multimodal.DecoderUnavailable, match="progressive"):
-            jpeg.decode_jpeg(prog)
-        # zero sampling factor: gate, never ZeroDivisionError
-        i = payload.index(b"\xff\xc0")
-        zero_hv = payload[: i + 11] + b"\x00" + payload[i + 12 :]
-        with pytest.raises(multimodal.DecoderUnavailable, match="sampling"):
-            jpeg.decode_jpeg(zero_hv)
-        # non-integral sampling ratio (Y 4x4 vs chroma 3x3): gate, never
-        # silently-misaligned chroma
-        p420 = jpeg.encode_jpeg(img, 90, subsampling="4:2:0")
-        j = p420.index(b"\xff\xc0")
-        odd = (p420[: j + 11] + b"\x44" + p420[j + 12 : j + 14]
-               + b"\x33" + p420[j + 15 : j + 17] + b"\x33" + p420[j + 18 :])
-        with pytest.raises(multimodal.DecoderUnavailable, match="sampling"):
-            jpeg.decode_jpeg(odd)
-        # truncated entropy stream
-        with pytest.raises(multimodal.DecoderUnavailable):
-            jpeg.decode_jpeg(payload[: len(payload) - 12] )
-        # dispatches through decode_image_real on magic bytes
-        got = multimodal.decode_image_real(payload)
-        assert got.shape == (8, 8, 3)
-
-    def test_jpeg_feature_extraction_end_to_end(self, spark):
-        """extract_features over REAL JPEG payloads inside mapInPandas."""
-        from aumos_drift_detector_spark.operators import jpeg
-
-        rng = np.random.default_rng(12)
-        rows = []
-        for k in range(3):
-            img = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
-            rows.append(
-                (f"j{k}", "image", bytearray(jpeg.encode_jpeg(img, 90)),
-                 (16, 16, None, None, "jpeg"))
-            )
-        media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        feats = (
-            multimodal.extract_features(media, use_fake_decoder=False)
-            .toPandas()
-            .sort_values("doc_id")
-        )
-        assert len(feats) == 3
-        assert ((feats["feat_mean"] >= 0) & (feats["feat_mean"] <= 1)).all()
-
-    def test_real_ppm_roundtrip_and_resize(self):
-        rng = np.random.default_rng(4)
-        px = rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
-        payload = b"P6\n# a comment\n5 6\n255\n" + px.tobytes()
-        got = multimodal.decode_image_real(payload)
-        np.testing.assert_array_equal(got, px)
-        small = multimodal.resize_nearest(got, (3, 3))
-        assert small.shape == (3, 3, 3)
-        np.testing.assert_array_equal(small[0, 0], px[0, 0])  # NN keeps origin
-
-    def test_real_bmp24_roundtrip(self):
-        import struct
-
-        # hand-build a 2x2 uncompressed 24-bit BMP (bottom-up, BGR, padded)
-        px = np.array(
-            [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [10, 20, 30]]],
-            dtype=np.uint8,
-        )
-        rows = b""
-        for r in px[::-1]:          # bottom-up
-            line = bytes(int(v) for p in r for v in p[::-1])  # BGR
-            rows += line + b"\x00" * ((4 - len(line) % 4) % 4)
-        header = (
-            b"BM" + struct.pack("<IHHI", 54 + len(rows), 0, 0, 54)
-            + struct.pack("<IiiHHIIiiII", 40, 2, 2, 1, 24, 0, len(rows), 0, 0, 0, 0)
-        )
-        got = multimodal.decode_image_real(header + rows)
-        np.testing.assert_array_equal(got, px)
-
-    def test_real_image_features_end_to_end(self, spark):
-        """extract_features with use_fake_decoder=False over REAL PPM
-        payloads — decode + resize + feature math all genuine."""
-        rows = [
-            (f"i{k}", "image", bytearray(multimodal.synth_ppm(16, 12, seed=k)),
-             (16, 12, None, None, "ppm"))
-            for k in range(6)
-        ]
-        media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        feats = (
-            multimodal.extract_features(media, use_fake_decoder=False)
-            .toPandas().set_index("doc_id")
-        )
-        assert len(feats) == 6
-        # cross-check one row against a pure-numpy recomputation
-        px = multimodal.resize_nearest(
-            multimodal.decode_image_real(multimodal.synth_ppm(16, 12, seed=0)),
-            (8, 8),
-        ).astype(np.float32) / 255.0
-        assert feats.loc["i0", "feat_mean"] == pytest.approx(float(px.mean()))
-        assert feats.loc["i0", "feature"] == pytest.approx(
-            px.mean(axis=(0, 1)).tolist()
-        )
-
-    def test_real_wav_audio_features(self, spark):
-        """audio_features over REAL PCM WAV payloads: decode via stdlib wave,
-        rms/zero-crossing/duration verified against closed forms."""
-        rate = 8000
-        rows = [
-            ("a0", "audio", bytearray(multimodal.synth_wav(440.0, 0.5, rate)),
-             (None, None, rate, None, "wav")),
-            ("a1", "audio", bytearray(multimodal.synth_wav(55.0, 0.25, rate, seed=1)),
-             (None, None, rate, None, "wav")),
-            ("v0", "video", bytearray(b"notaudio"), (None, None, None, 10, "h264")),
-        ]
-        media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
-        out = multimodal.audio_features(media).toPandas().set_index("doc_id")
-        assert set(out.index) == {"a0", "a1"}  # video row filtered out
-        assert out.loc["a0", "duration_sec"] == pytest.approx(0.5, abs=1e-3)
-        # 0.5-amplitude sine: rms ~ 0.5/sqrt(2) (plus 1% noise)
-        assert out.loc["a0", "rms"] == pytest.approx(0.3536, abs=0.01)
-        # 440 Hz sine at 8 kHz: ~2*440 sign flips/sec -> zcr ~ 0.11
-        assert out.loc["a0", "zero_crossing_rate"] == pytest.approx(0.11, abs=0.02)
-        assert out.loc["a1", "n_samples"] == rate // 4
-
-    def test_frame_sampling_plan(self, spark):
-        media = multimodal.synth_media_table(spark, n_rows=9)
-        frames = multimodal.frame_sample_plan(media, every_n=100).toPandas()
-        vids = media.where(F.col("kind") == "video").count()
-        assert len(frames) == vids * 3  # frames 0,100,200 of 300
-
-
 class TestStopShingleFilter:
     def test_benign_data_identical_pairs(self, spark, docs_df):
         # cap far above any posting length -> identical output to unfiltered
@@ -797,97 +444,6 @@ class TestStopShingleFilter:
             df, "doc_id", "text", 3, 0.0, stop_shingle_cap=None
         )
         assert unfiltered.count() == 4950
-
-
-class TestIvfIndex:
-    @pytest.fixture(scope="class")
-    def ivf_data(self, spark):
-        rng = np.random.default_rng(5)
-        vecs = rng.normal(size=(300, 16)).astype(np.float64)
-        rows = [(int(i), vecs[i].tolist()) for i in range(300)]
-        return spark.createDataFrame(rows, ["vec_id", "embedding"]).cache(), vecs
-
-    def test_persisted_index_prunes_and_matches(self, spark, ivf_data, tmp_path):
-        df, vecs = ivf_data
-        from aumos_drift_detector_spark.operators.similarity import (
-            IvfIndex,
-            build_ivf_index,
-        )
-
-        idx = build_ivf_index(df, "embedding", "vec_id", n_cells=8)
-        q = vecs[3]
-        live = idx.search(q, k=5, n_probe=8).toPandas()  # probe all -> exact
-        # exact numpy top-5
-        sims = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)) @ (
-            q / np.linalg.norm(q)
-        )
-        want = set(np.argsort(-sims)[:5].tolist())
-        assert set(live["vec_id"]) == want
-
-        path = str(tmp_path / "ivf")
-        idx.save(path)
-        loaded = IvfIndex.load(spark, path, "embedding", "vec_id")
-        assert np.allclose(loaded.centers, idx.centers)
-        again = loaded.search(q, k=5, n_probe=8).toPandas()
-        assert set(again["vec_id"]) == want
-
-        # pruning: a 2-probe search against the partitioned files must only
-        # scan the probed cells (partition filters in the plan)
-        pruned = loaded.search(q, k=5, n_probe=2)
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "_cell" in plan
-        rows = pruned.toPandas()
-        assert len(rows) == 5
-        cells = {r["_cell"] for r in loaded.assigned.where(
-            F.col("vec_id").isin([int(v) for v in rows["vec_id"]])).collect()}
-        assert cells <= set(loaded.probe_cells(q, 2))
-
-    def test_loaded_probe_scans_only_probed_cell_files(
-        self, spark, ivf_data, tmp_path
-    ):
-        """Physical pruning proof (round-4 directive): a loaded index's probe
-        reads ONLY files under the probed cells' partition directories, and
-        the parquet scan carries the _cell partition filter — guards the
-        100-TB claim in similarity.py (write-time clustering, read-time
-        pruning)."""
-        df, vecs = ivf_data
-        from aumos_drift_detector_spark.operators.similarity import (
-            IvfIndex,
-            build_ivf_index,
-        )
-
-        idx = build_ivf_index(df, "embedding", "vec_id", n_cells=8)
-        path = str(tmp_path / "ivf_prune")
-        idx.save(path)
-        loaded = IvfIndex.load(spark, path, "embedding", "vec_id")
-        q = vecs[7]
-        probed = loaded.probe_cells(q, 2)
-        pruned = loaded.assigned.where(F.col("_cell").isin(probed))
-
-        files = {
-            r["f"]
-            for r in pruned.select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        }
-        all_files = {
-            r["f"]
-            for r in spark.read.parquet(f"{path}/cells")
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        }
-        assert files, "probe scanned no files"
-        assert all(
-            any(f"_cell={c}/" in f for c in probed) for f in files
-        ), files
-        assert len(files) < len(all_files)
-
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-        # and the search result over the pruned frame is still well-formed
-        got = loaded.search(q, k=5, n_probe=2).toPandas()
-        assert len(got) == 5
 
 
 class TestPiiScrub:

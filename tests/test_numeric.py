@@ -5,6 +5,7 @@ Expected values are published tables / scipy-documented results:
 - chi2 SF spot values from standard chi-squared tables.
 """
 
+import itertools
 import math
 
 import pytest
@@ -12,6 +13,7 @@ import pytest
 from aumos_drift_detector_spark.functions.numeric import (
     chi2_sf,
     kolmogorov_sf,
+    ks_2samp_exact_sf,
     ks_2samp_pvalue,
     regularized_gamma_q,
 )
@@ -95,3 +97,60 @@ class TestRegularizedGammaQ:
         # Q(0.5, x) = erfc(sqrt(x))
         for x in (0.25, 1.0, 4.0):
             assert abs(regularized_gamma_q(0.5, x) - math.erfc(math.sqrt(x))) < 1e-9
+
+
+class TestExactKs:
+    def _brute_force(self, n, m, d):
+        """P(D >= d) by enumerating all C(n+m, n) orderings."""
+        total = 0
+        ge = 0
+        for combo in itertools.combinations(range(n + m), n):
+            xs = set(combo)
+            i = j = 0
+            dmax = 0.0
+            for pos in range(n + m):
+                if pos in xs:
+                    i += 1
+                else:
+                    j += 1
+                dmax = max(dmax, abs(i / n - j / m))
+            total += 1
+            if dmax >= d - 1e-12:
+                ge += 1
+        return ge / total
+
+    @pytest.mark.parametrize(
+        "n,m", [(4, 4), (5, 3), (6, 6), (7, 2)]
+    )
+    def test_matches_brute_force(self, n, m):
+        import math as _math
+
+        lcm = n * m // _math.gcd(n, m)
+        for k in range(1, lcm + 1):
+            d = k / lcm
+            got = ks_2samp_exact_sf(d, n, m)
+            want = self._brute_force(n, m, d)
+            assert got == pytest.approx(want, abs=1e-12), (n, m, d)
+
+    def test_degenerate(self):
+        assert ks_2samp_exact_sf(0.0, 10, 10) == 1.0
+        assert ks_2samp_exact_sf(1.0, 1, 1) == 1.0  # D is always 1 at n=m=1
+
+    def test_auto_switches_at_scipy_cutoff(self):
+        # exact and asymptotic agree to ~1e-3 at n=1000 but are not identical
+        d, n = 0.05, 1000
+        exact = ks_2samp_pvalue(d, n, n, method="exact")
+        asymp = ks_2samp_pvalue(d, n, n, method="asymp")
+        auto = ks_2samp_pvalue(d, n, n)
+        assert auto == exact
+        assert abs(exact - asymp) < 5e-3
+        big = ks_2samp_pvalue(d, 20000, 20000)
+        assert big == ks_2samp_pvalue(d, 20000, 20000, method="asymp")
+
+    def test_large_n_no_overflow(self):
+        # 5000x5000 lattice: counts ~ C(10000,5000) >> float range; the
+        # renormalized DP must still produce a sane probability
+        p_small_d = ks_2samp_pvalue(0.01, 5000, 5000, method="exact")
+        p_big_d = ks_2samp_pvalue(0.1, 5000, 5000, method="exact")
+        assert 0.9 < p_small_d <= 1.0
+        assert 0.0 <= p_big_d < 1e-15

@@ -250,53 +250,3 @@ def test_w1_kernel_matches_expanded_oracle(sketch):
     assert raw_shift == pytest.approx(raw, abs=1e-9)
     raw_scaled = _w1_kernel(v * 3.0, cr, cp, cfg, "x")[0].details["raw_distance"]
     assert raw_scaled == pytest.approx(3.0 * raw, rel=1e-9, abs=1e-9)
-
-
-@settings(max_examples=40, deadline=None)
-@given(
-    h=st.integers(1, 40),
-    w=st.integers(1, 40),
-    quality=st.integers(60, 100),
-    ss=st.sampled_from(["4:4:4", "4:2:0"]),
-    seed=st.integers(0, 2**16),
-)
-def test_jpeg_roundtrip_bounded_error_any_shape(h, w, quality, ss, seed):
-    """Baseline JPEG round trip never crashes and keeps pixel error bounded
-    for ANY dimensions (1x1 up, MCU-aligned or not) on piecewise-smooth
-    content. Error bound scales with quantization: the Annex K luma table's
-    worst step at q is ~ceil(121 * scale); smooth gradients stay far under
-    it, so a generous fixed bound catches structural bugs (block offset,
-    bad predictor reset, crop drift) without flaking on quantization."""
-    from aumos_drift_detector_spark.operators import jpeg
-
-    rng = np.random.default_rng(seed)
-    base = rng.integers(40, 216, size=3)
-    yy, xx = np.mgrid[0:h, 0:w]
-    img = np.stack(
-        [np.clip(base[c] + yy + 2 * xx, 0, 255) for c in range(3)], axis=2
-    ).astype(np.uint8)
-    out = jpeg.decode_jpeg(jpeg.encode_jpeg(img, quality, subsampling=ss))
-    assert out.shape == img.shape
-    err = np.abs(out.astype(int) - img.astype(int))
-    # chroma subsampling halves resolution; gradients of slope <=2/px stay
-    # within a few quantization steps even at q=60
-    assert err.max() <= (24 if ss == "4:2:0" else 16), (h, w, quality, err.max())
-
-
-@settings(max_examples=40, deadline=None)
-@given(data=st.binary(min_size=2, max_size=400), seed=st.integers(0, 2**16))
-def test_jpeg_arbitrary_bytes_never_raise_raw_errors(data, seed):
-    """Garbage after a JPEG SOI must surface as DecoderUnavailable (or
-    decode, for the rare accidentally-valid prefix) — never struct/numpy/
-    zlib/KeyError leaking into mapInPandas batch callers."""
-    from aumos_drift_detector_spark.operators import jpeg
-    from aumos_drift_detector_spark.operators.multimodal import (
-        DecoderUnavailable,
-    )
-
-    payload = b"\xff\xd8" + data
-    try:
-        out = jpeg.decode_jpeg(payload)
-        assert out.ndim == 3 and out.shape[2] == 3
-    except DecoderUnavailable:
-        pass
