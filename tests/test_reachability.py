@@ -25,6 +25,10 @@ ENTRY_POINTS = (
 ALLOWED_UNREACHED = {
     "operators.baseline": "F3 baseline capture/compare; kept until it is re-based on the drift kernels or deleted",
     "streaming.*": "Structured Streaming drift, concept and dedup jobs (survey section 2.7); no batch entry point runs them",
+    "operators.report": "S7 report sink (out of engine core); pending its own removal together with its tests",
+    "operators.html_report": "S7 HTML report sink (out of engine core); pending removal with operators.report",
+    "operators.notifications": "Slack/email/PagerDuty payload rendering over alert rows; pending its own removal",
+    "sources.kafka_sink": "S5 Kafka event sink (out of core scope, no broker); pending its own removal",
 }
 
 

@@ -205,40 +205,6 @@ class TestReportRegistry:
             reg.export_report_json("nope")
 
 
-class TestBeeswarm:
-    def test_shape_and_determinism(self, spark):
-        from aumos_drift_detector_spark.operators.importance import beeswarm_data
-
-        rng = np.random.default_rng(8)
-        ref = spark.createDataFrame(
-            pd.DataFrame({"f1": rng.normal(0, 1, 4000),
-                          "f2": rng.normal(5, 2, 4000)})
-        )
-        prod = spark.createDataFrame(
-            pd.DataFrame({"f1": rng.normal(1, 1, 4000),
-                          "f2": rng.normal(5, 2, 4000)})
-        )
-        w = {"f1": 0.8, "f2": 0.1}
-        a = beeswarm_data(ref, prod, ["f1", "f2"], w, samples_per_feature=100)
-        b = beeswarm_data(ref, prod, ["f1", "f2"], w, samples_per_feature=100)
-        assert set(a) == {"f1", "f2"}
-        assert len(a["f1"]) == 100 and len(a["f2"]) == 100
-        assert a == b  # deterministic (crc32 feature seed, value-hash pools)
-        # f1 shifted +1 vs reference N(0,1): mean shap ~ 0.8 * 1.0
-        mean_shap = np.mean([p["shap_value"] for p in a["f1"]])
-        assert 0.4 < mean_shap < 1.2
-        # unweighted feature's shap magnitudes scale with its small weight
-        assert max(abs(p["shap_value"]) for p in a["f2"]) < 1.0
-
-    def test_unranked_feature_skipped_empty_pool_empty(self, spark):
-        from aumos_drift_detector_spark.operators.importance import beeswarm_data
-
-        ref = spark.createDataFrame([(1.0,), (2.0,)], ["f1"])
-        prod = spark.createDataFrame([(1.5,), (2.5,)], ["f1"])
-        out = beeswarm_data(ref, prod, ["f1"], {}, samples_per_feature=10)
-        assert out == {}  # no importance entry -> skipped (reference parity)
-
-
 class TestTimeSeriesAndPdf:
     def test_build_time_series_matches_reference_shape(self, spark):
         """report_generator.py:687-706: {feature: [{timestamp, score}...]}

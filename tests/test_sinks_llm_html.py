@@ -1,82 +1,11 @@
-"""Kafka event-frame builders, LLM output monitor, HTML report, exact KS."""
+"""Kafka event-frame builders and the HTML report."""
 
-import itertools
 import json
-import math
 
-import numpy as np
 import pandas as pd
-import pytest
-from pyspark.sql import functions as F
 
-from aumos_drift_detector_spark.functions.numeric import (
-    ks_2samp_exact_sf,
-    ks_2samp_pvalue,
-)
 from aumos_drift_detector_spark.operators.html_report import render_html_report
-from aumos_drift_detector_spark.operators.llm_monitor import (
-    LLMOutputMonitor,
-    embed_text_column,
-    hash_projection_embedder,
-)
 from aumos_drift_detector_spark.sources import kafka_sink as K
-
-
-class TestExactKs:
-    def _brute_force(self, n, m, d):
-        """P(D >= d) by enumerating all C(n+m, n) orderings."""
-        total = 0
-        ge = 0
-        for combo in itertools.combinations(range(n + m), n):
-            xs = set(combo)
-            i = j = 0
-            dmax = 0.0
-            for pos in range(n + m):
-                if pos in xs:
-                    i += 1
-                else:
-                    j += 1
-                dmax = max(dmax, abs(i / n - j / m))
-            total += 1
-            if dmax >= d - 1e-12:
-                ge += 1
-        return ge / total
-
-    @pytest.mark.parametrize(
-        "n,m", [(4, 4), (5, 3), (6, 6), (7, 2)]
-    )
-    def test_matches_brute_force(self, n, m):
-        import math as _math
-
-        lcm = n * m // _math.gcd(n, m)
-        for k in range(1, lcm + 1):
-            d = k / lcm
-            got = ks_2samp_exact_sf(d, n, m)
-            want = self._brute_force(n, m, d)
-            assert got == pytest.approx(want, abs=1e-12), (n, m, d)
-
-    def test_degenerate(self):
-        assert ks_2samp_exact_sf(0.0, 10, 10) == 1.0
-        assert ks_2samp_exact_sf(1.0, 1, 1) == 1.0  # D is always 1 at n=m=1
-
-    def test_auto_switches_at_scipy_cutoff(self):
-        # exact and asymptotic agree to ~1e-3 at n=1000 but are not identical
-        d, n = 0.05, 1000
-        exact = ks_2samp_pvalue(d, n, n, method="exact")
-        asymp = ks_2samp_pvalue(d, n, n, method="asymp")
-        auto = ks_2samp_pvalue(d, n, n)
-        assert auto == exact
-        assert abs(exact - asymp) < 5e-3
-        big = ks_2samp_pvalue(d, 20000, 20000)
-        assert big == ks_2samp_pvalue(d, 20000, 20000, method="asymp")
-
-    def test_large_n_no_overflow(self):
-        # 5000x5000 lattice: counts ~ C(10000,5000) >> float range; the
-        # renormalized DP must still produce a sane probability
-        p_small_d = ks_2samp_pvalue(0.01, 5000, 5000, method="exact")
-        p_big_d = ks_2samp_pvalue(0.1, 5000, 5000, method="exact")
-        assert 0.9 < p_small_d <= 1.0
-        assert 0.0 <= p_big_d < 1e-15
 
 
 class TestKafkaEventFrames:
@@ -135,57 +64,6 @@ class TestKafkaEventFrames:
         )
         out = K.alert_raised_events(alerts, "t1").collect()
         assert {json.loads(r["value"])["alert_id"] for r in out} == {"a1", "a3"}
-
-
-class TestLLMMonitor:
-    def test_embedder_deterministic_and_normalized(self):
-        emb = hash_projection_embedder(dim=32)
-        v = emb(["hello world", "hello world", "totally different text"])
-        assert np.allclose(v[0], v[1])
-        assert not np.allclose(v[0], v[2])
-        assert np.linalg.norm(v[0]) == pytest.approx(1.0)
-
-    def test_embed_text_column(self, spark):
-        df = spark.createDataFrame(
-            pd.DataFrame({"id": [1, 2], "text": ["a b c", None]})
-        )
-        out = embed_text_column(df, "text", dim=16).collect()
-        assert len(out) == 2
-        assert all(len(r["embedding"]) == 16 for r in out)
-
-    def test_detects_semantic_shift(self, spark):
-        rng = np.random.default_rng(0)
-        topics_a = ["spark shuffle partition executor memory stage task"] * 1
-        ref_rows = [
-            " ".join(rng.choice(topics_a[0].split(), 8)) for _ in range(150)
-        ]
-        prod_same = [
-            " ".join(rng.choice(topics_a[0].split(), 8)) for _ in range(150)
-        ]
-        other = "recipe butter sugar flour oven whisk batter vanilla".split()
-        prod_diff = [" ".join(rng.choice(other, 8)) for _ in range(150)]
-        mk = lambda rows: spark.createDataFrame(
-            pd.DataFrame({"text": rows})
-        )
-        mon = LLMOutputMonitor(mmd_threshold=0.05)
-        same = mon.detect(mk(ref_rows), mk(prod_same))
-        diff = mon.detect(mk(ref_rows), mk(prod_diff))
-        assert same["test"] == "llm_output_mmd"
-        assert not same["drift_detected"]
-        assert diff["drift_detected"]
-        assert diff["mmd_squared"] > same["mmd_squared"]
-        assert diff["n_reference_texts"] == 150
-
-    def test_empty_inputs_short_circuit(self, spark):
-        empty = spark.createDataFrame([], "text string")
-        full = spark.createDataFrame(pd.DataFrame({"text": ["x"]}))
-        out = LLMOutputMonitor().detect(empty, full)
-        assert out == {
-            "test": "llm_output_mmd",
-            "drift_detected": False,
-            "mmd_squared": 0.0,
-            "reason": "empty_inputs",
-        }
 
 
 class TestHtmlReport:
