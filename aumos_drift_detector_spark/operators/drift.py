@@ -851,95 +851,6 @@ def _binned_counts_shared_range(
     )
 
 
-def binned_counts_fixed_domain_arrow(
-    df: DataFrame,
-    code_col: str,
-    arr_col: str,
-    n_bins: int,
-    domain: tuple[float, float],
-) -> DataFrame:
-    """Fixed-domain binned counts of an ARRAY column with NO explode.
-
-    The explode plan materializes one row per token through whole-stage
-    codegen and a hash aggregate — at 10^12 tokens that is the dominant
-    stage of the whole validation pass (measured alpha ~0.96 of the batch
-    wall). This path keeps the arrays packed: each Arrow batch flattens to
-    one numpy vector (zero-copy-ish), bins with the SAME double arithmetic
-    as the codegen expression (bitwise-identical `floor((v-lo)/width)`), and
-    bincounts into <= groups x n_bins partial rows per batch — so the
-    shuffle moves thousands of pre-aggregated rows instead of billions of
-    token rows. Output: (code_col int, bin int, cnt long) partials; sum
-    downstream. Input ``code_col`` must be a small int group code
-    (int-coded partition key); NULL arrays contribute nothing (explode
-    parity).
-    """
-    lo, hi = float(domain[0]), float(domain[1])
-    width = (hi - lo) / n_bins
-    out_schema = T.StructType(
-        [
-            T.StructField(code_col, T.IntegerType()),
-            T.StructField("bin", T.IntegerType()),
-            T.StructField("cnt", T.LongType()),
-        ]
-    )
-
-    def hist_batches(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            arr = rb.column(1)
-            codes_col = rb.column(0)
-            # per-list lengths with NULL lists as 0 — aligns np.repeat with
-            # flatten(), which contributes nothing for null entries
-            lens = pc.fill_null(pc.list_value_length(arr), 0).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            if int(lens.sum()) == 0:
-                continue
-            flat = arr.flatten().to_numpy(zero_copy_only=False).astype(
-                np.float64
-            )
-            codes = np.repeat(
-                codes_col.to_numpy(zero_copy_only=False).astype(np.int64),
-                lens,
-            )
-            # explode parity: clean_values drops NULL/NaN/inf elements, and
-            # flatten() keeps element-level nulls (as NaN after to_numpy) —
-            # mask them out or floor(NaN)->INT64_MIN crashes bincount
-            keep = np.isfinite(flat)
-            if not keep.all():
-                flat = flat[keep]
-                codes = codes[keep]
-                if flat.size == 0:
-                    continue
-            # same double arithmetic as the codegen expression in
-            # _binned_counts_shared_range's domain branch
-            raw = np.floor((flat - lo) / width)
-            bins = np.clip(raw, 0, n_bins - 1).astype(np.int64)
-            bins[flat == hi] = n_bins - 1
-            combined = codes * n_bins + bins
-            counts = np.bincount(combined)
-            nz = np.nonzero(counts)[0]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array((nz // n_bins).astype(np.int32), pa.int32()),
-                    pa.array((nz % n_bins).astype(np.int32), pa.int32()),
-                    pa.array(counts[nz].astype(np.int64), pa.int64()),
-                ],
-                names=[code_col, "bin", "cnt"],
-            )
-
-    return (
-        df.select(code_col, arr_col)
-        .mapInArrow(hist_batches, out_schema)
-        .groupBy(code_col, "bin")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
 def _histogram_pair_test(
     kernel,
     ref_df: DataFrame,

@@ -62,30 +62,21 @@ def widen_narrow_input(df: DataFrame) -> DataFrame:
 CHECKPOINT_MIN_BYTES = 4 << 20
 
 
-def catalyst_size_bytes(df: DataFrame) -> int | None:
-    """Catalyst's size estimate of ``df``'s optimized plan (free: no job),
-    or None when it is unknown — the read failed, or a leaf without stats
-    (e.g. an in-memory frame) reported the Long.MaxValue default.  The one
-    reader of this statistic; each gate picks its own answer for None.
+def worth_materializing(df: DataFrame, min_bytes: int = CHECKPOINT_MIN_BYTES) -> bool:
+    """Cost-based gate for corpus-scale localCheckpoints, on Catalyst's
+    size estimate of ``df``'s optimized plan (free: no job).  Unknown
+    stats (the read failed, or a leaf without stats such as an in-memory
+    frame reported the Long.MaxValue default) resolve to True: at real
+    scale re-computation is the expensive branch, so "huge until proven
+    small" is the safe default.
     """
     try:
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
-        return None
-    return None if size >= (1 << 62) else size
-
-
-def worth_materializing(df: DataFrame, min_bytes: int = CHECKPOINT_MIN_BYTES) -> bool:
-    """Cost-based gate for corpus-scale localCheckpoints — the same
-    Catalyst size statistic the validation pass's token-histogram plan
-    choice reads.  Unknown stats resolve to True: at real scale
-    re-computation is the expensive branch, so "huge until proven small"
-    is the safe default.
-    """
-    size = catalyst_size_bytes(df)
-    return size is None or size >= min_bytes
+        return True
+    return size >= min_bytes
 
 
 def _word_array(text: Column) -> Column:

@@ -65,7 +65,6 @@ from aumos_drift_detector_spark.config import DEFAULT_CONFIG, EngineConfig
 from aumos_drift_detector_spark.functions.kernels import recommended_action, severity
 from aumos_drift_detector_spark.operators import constraints as C
 from aumos_drift_detector_spark.operators import drift as D
-from aumos_drift_detector_spark.operators.text import catalyst_size_bytes
 from aumos_drift_detector_spark.sources.synth import TOKEN_SCHEMA
 from aumos_drift_detector_spark.sources.tables import driver_frame
 
@@ -136,39 +135,6 @@ class ValidationSettings:
     # commit granularity: partitions per batch (None = all pending in one
     # batch). Smaller batches = less lost work on a kill, more job launches.
     partition_batch_size: int | None = None
-    # token histogram physical plan: True = Arrow flatten+bincount with NO
-    # explode (shuffle moves pre-aggregated counts, not token rows);
-    # False = the explode + codegen hash-aggregate plan; None (default) =
-    # cost-based auto, see below. Sampling (token_sample_fraction < 1)
-    # always uses the explode plan, whose row-sampling semantics it is
-    # defined over.
-    # WHY auto (r5 in-pass A/Bs at two scales): isolated, the Arrow stage is
-    # 1.2-1.6x faster, but INSIDE the concurrent pass at SMALL inputs its 32
-    # Python workers + Arrow IPC oversubscribe the host against the parallel
-    # JVM jobs — measured walls 26-42s (arrow) vs 11-17s (explode) on
-    # identical 400k-row input, the co-running violations job itself
-    # degrading 8.6s -> 25.5s. At LARGE inputs the single token-histogram
-    # job dominates the pass (alpha ~0.95) and the Arrow plan stops losing
-    # and starts shifting load OUT of the JVM (its co-running JVM jobs
-    # speed up: ntok_sketch 33.2s vs 59.1s at 16M). Gate-clean same-day
-    # local[32] pairs (scripts/scale_points.jsonl; BASELINE.md "Round-5
-    # in-pass token-histogram A/B"): 400k explode 2-3x faster; 4M rows /
-    # 1.8 GB arrow 44.0s vs explode 49.3s; 16M / 7.3 GB
-    # arrow 114.5s vs explode 116.0s (r4's better windows had arrow at
-    # 74-90s). Auto therefore picks Arrow only when the CURRENT frame's
-    # Catalyst-estimated scan size crosses ``token_hist_arrow_min_bytes`` —
-    # the same cost-based-stats mechanism AQE uses for join strategy. Both
-    # plans are bitwise-equal (pytest-pinned): purely a physical choice.
-    token_hist_arrow: bool | None = None
-    # Auto threshold (bytes, the Catalyst size estimate of the current
-    # frame, ``text.catalyst_size_bytes``). Calibrated on the A/Bs above:
-    # explode wins decisively at 0.18 GB, arrow ties-or-wins from 1.8 GB
-    # up, so the gate sits at 1 GiB — below it the explode plan's decisive
-    # small-input win rules; above it arrow never loses and frees JVM cores
-    # for the concurrent jobs. Frames with UNKNOWN stats (Long.MaxValue leaf
-    # default, e.g. in-memory test frames) use explode: the safe plan
-    # needs no Python workers.
-    token_hist_arrow_min_bytes: int = 1 << 30
     engine: EngineConfig = field(default_factory=lambda: DEFAULT_CONFIG)
 
 
@@ -192,8 +158,7 @@ class ValidationRun:
         self.out_dir = out_dir.rstrip("/")
         self.run_id = run_id or uuid.uuid4().hex[:12]
         self.s = settings
-        # resolved per run() from settings + Catalyst stats; safe default
-        # for callers that drive _run_batch directly
+        # read by the perfbench regime check and by bench.py's output
         self.token_hist_plan = "explode"
 
     # -- output tables ------------------------------------------------------
@@ -226,12 +191,6 @@ class ValidationRun:
         t0 = time.monotonic()
         s = self.s
         part = s.partition_col
-        # resolve the token-histogram physical plan once per run (auto mode
-        # reads the Catalyst size estimate of the full current frame)
-        self.token_hist_plan = (
-            "arrow" if self._resolve_token_hist_arrow() else "explode"
-        )
-
         raw_parts = [
             r[0]
             for r in self.current.select(part).distinct().collect()
@@ -271,27 +230,6 @@ class ValidationRun:
             violation_counts=violation_counts,
             wall_ms=wall_ms,
         )
-
-    # -- plan choice ----------------------------------------------------------
-
-    def _resolve_token_hist_arrow(self) -> bool:
-        """Pick the token-histogram physical plan (see settings docstring).
-
-        ``settings.token_hist_arrow`` pins it; None = cost-based auto on the
-        CURRENT frame's Catalyst size estimate (``catalyst_size_bytes``:
-        free — no extra job), the same statistic AQE's join planning reads.
-        Unknown stats (e.g. in-memory test frames) resolve to the explode
-        plan: it needs no Python workers and wins every measured
-        small-input pass. Resolved once per run and recorded as
-        ``self.token_hist_plan`` so bench output can self-describe.
-        """
-        s = self.s
-        if s.token_sample_fraction < 1.0:
-            return False  # sampling semantics are defined over exploded rows
-        if s.token_hist_arrow is not None:
-            return bool(s.token_hist_arrow)
-        size = catalyst_size_bytes(self.current)
-        return size is not None and size >= s.token_hist_arrow_min_bytes
 
     # -- one commit unit ----------------------------------------------------
 
@@ -469,45 +407,28 @@ class ValidationRun:
                     ]),
                 )
             )
-            if self.token_hist_plan == "arrow":
-                # NO-EXPLODE plan (round 4): Arrow batches flatten+bincount
-                # in numpy, so the shuffle moves <= batches x groups x 256
-                # pre-aggregated rows instead of one row per token — this
-                # stage was alpha~0.96 of the whole pass wall. Bin arithmetic
-                # is bitwise-identical to the explode plan (pytest-pinned).
-                def side_counts(df, side):
-                    return D.binned_counts_fixed_domain_arrow(
-                        df.join(code_df, part).select("_pcode", s.tokens_col),
-                        "_pcode", s.tokens_col, 256, (0, VOCAB_SIZE),
-                    ).select(
-                        "_pcode", F.lit(side).alias("side"), "bin", "cnt"
-                    )
-
-                pdf = (
-                    side_counts(base, 0)
-                    .unionByName(side_counts(cur, 1))
-                    .toPandas()
-                )
-            else:
-                # explode plan: required when token_sample_fraction < 1.0
-                # (sampling is defined over exploded token rows, seed 42)
-                cur_tok = cur.join(code_df, part).select(
-                    "_pcode", F.explode(s.tokens_col).alias("token_id")
-                )
-                base_tok = base.join(code_df, part).select(
-                    "_pcode", F.explode(s.tokens_col).alias("token_id")
-                )
-                if s.token_sample_fraction < 1.0:
-                    cur_tok = cur_tok.sample(s.token_sample_fraction, seed=42)
-                    base_tok = base_tok.sample(s.token_sample_fraction, seed=42)
-                # token_id stays int (cheap isNotNull filter); known vocab
-                # domain -> ONE single-pass fixed-width binned count feeds
-                # BOTH the JS and bucketed chi-squared kernels — collect is
-                # groups x 256.
-                pdf = D._binned_counts_shared_range(
-                    base_tok, cur_tok, "token_id", ("_pcode",), 256,
-                    domain=(0, VOCAB_SIZE),
-                )
+            # explode + codegen hash aggregate; sampling is defined over
+            # the exploded token rows (seed 42)
+            cur_tok = cur.join(code_df, part).select(
+                "_pcode", F.explode(s.tokens_col).alias("token_id")
+            )
+            base_tok = base.join(code_df, part).select(
+                "_pcode", F.explode(s.tokens_col).alias("token_id")
+            )
+            if s.token_sample_fraction < 1.0:
+                # keyword fraction: sample(0.5, seed=42) drops the seed in
+                # pyspark and draws a random one
+                frac = s.token_sample_fraction
+                cur_tok = cur_tok.sample(fraction=frac, seed=42)
+                base_tok = base_tok.sample(fraction=frac, seed=42)
+            # token_id stays int (cheap isNotNull filter); known vocab
+            # domain -> ONE single-pass fixed-width binned count feeds
+            # BOTH the JS and bucketed chi-squared kernels — collect is
+            # groups x 256.
+            pdf = D._binned_counts_shared_range(
+                base_tok, cur_tok, "token_id", ("_pcode",), 256,
+                domain=(0, VOCAB_SIZE),
+            )
             pdf[part] = pdf["_pcode"].map(dict(enumerate(batch)))
             return pdf.drop(columns=["_pcode"])
 

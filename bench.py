@@ -258,16 +258,10 @@ def run_validation_pass(spark, cur_dir: str, base_dir: str, out_dir: str):
     dim = spark.createDataFrame(
         [("web",), ("books",), ("code",), ("wiki",)], ["source"]
     )
-    # SPARK_GRAFT_TOKEN_HIST pins the histogram physical plan for A/B
-    # diagnostics: "explode" / "arrow" / "auto" (default: auto = the
-    # shipped cost-based default, Catalyst-size-gated)
-    plan_env = os.environ.get("SPARK_GRAFT_TOKEN_HIST", "auto").lower()
-    arrow_flag = {"explode": False, "arrow": True}.get(plan_env)
     settings = ValidationSettings(
         max_null_fraction=0.05,
         token_sample_fraction=1.0,  # full token histogram: the bench measures
         run_token_histogram=True,   # the engine, not a sampling shortcut
-        token_hist_arrow=arrow_flag,
     )
     run = ValidationRun(spark, cur, base, dim, out_dir, settings=settings)
     t0 = time.monotonic()

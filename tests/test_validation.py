@@ -1,5 +1,7 @@
 """End-to-end validation-pass tests: exact verdicts, violations, and resume."""
 
+import json
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -374,151 +376,121 @@ class TestSparkSubmitLaunch:
         assert (tmp_path / "out").exists()
 
 
-class TestTokenHistArrowPlan:
-    def test_arrow_bincount_matches_explode_plan(self, spark):
-        """The no-explode Arrow flatten+bincount plan must produce counts
-        BITWISE identical to the explode + codegen hash-aggregate plan,
-        including NULL token arrays (contribute nothing), NULL elements
-        INSIDE arrays (clean_values drops them; the Arrow path must mask,
-        not crash on floor(NaN)->INT64_MIN), and boundary token ids
-        (0 and vocab-1)."""
-        from aumos_drift_detector_spark.operators import drift as D
+class TestTokenHistogram:
+    def test_scores_match_numpy_oracle(self, spark, tmp_path):
+        """token_hist_js / token_hist_chi2 equal the kernels applied to
+        counts binned in numpy from the Python lists: NULL arrays and NULL
+        elements contribute nothing, empty arrays count zero tokens, and
+        boundary ids 0 and VOCAB_SIZE - 1 land in bins 0 and 255."""
+        from aumos_drift_detector_spark.functions.kernels import (
+            chi2_from_counts,
+            js_from_counts,
+        )
+        from aumos_drift_detector_spark.sources.synth import TOKEN_SCHEMA, VOCAB_SIZE
 
-        rows = []
-        rng = np.random.default_rng(3)
-        for i in range(400):
-            toks = rng.integers(0, 50257, rng.integers(1, 60)).tolist()
-            rows.append((i % 3, toks))
-        rows += [
-            (0, None),
-            (1, []),
-            (2, [0, 50256, 50256]),
-            (0, [None, 7, None]),          # element-level nulls mixed in
-            (1, [None]),                    # all-null list -> contributes 0
-            (2, [50256, None, 0, None, 3]),
+        rng = np.random.default_rng(11)
+        parts = ("web", "books", "code")
+        sides = {}
+        for side in ("cur", "base"):
+            rows = []
+            for p in parts:
+                for i in range(40):
+                    toks = rng.integers(0, 2_000, rng.integers(50, 150)).tolist()
+                    if side == "cur" and p == "code":
+                        # the one drifted partition: ids shifted up the vocab
+                        toks = [t + 20_000 for t in toks]
+                    rows.append([f"{side}-{p}-{i}", toks, p])
+                rows += [
+                    [f"{side}-{p}-null", None, p],
+                    [f"{side}-{p}-empty", [], p],
+                    [f"{side}-{p}-edges", [0, VOCAB_SIZE - 1, VOCAB_SIZE - 1], p],
+                    [f"{side}-{p}-nulls", [None, 7, None, VOCAB_SIZE - 1], p],
+                    [f"{side}-{p}-allnull", [None], p],
+                ]
+            sides[side] = rows
+
+        def frame(rows):
+            return spark.createDataFrame(
+                [(d, t, None if t is None else len(t), p) for d, t, p in rows],
+                TOKEN_SCHEMA,
+            )
+
+        dim = spark.createDataFrame([(p,) for p in parts], "source string")
+        report = ValidationRun(
+            spark, frame(sides["cur"]), frame(sides["base"]), dim,
+            str(tmp_path / "out"),
+        ).run(resume=False)
+
+        width = VOCAB_SIZE / 256
+
+        def oracle_counts(rows, p):
+            flat = np.array(
+                [
+                    t
+                    for _, toks, q in rows
+                    if q == p and toks is not None
+                    for t in toks
+                    if t is not None
+                ],
+                dtype=np.float64,
+            )
+            bins = np.clip(np.floor(flat / width), 0, 255).astype(np.int64)
+            return np.bincount(bins, minlength=256)
+
+        res = report.results
+        cats = [str(i) for i in range(256)]
+        for p in parts:
+            ref = oracle_counts(sides["base"], p)
+            prod = oracle_counts(sides["cur"], p)
+            assert ref[0] > 0 and ref[255] > 0
+            got = res[res["partition_value"] == p].set_index("check_name")["score"]
+            assert got["token_hist_js"] == js_from_counts(ref, prod).score
+            assert got["token_hist_chi2"] == chi2_from_counts(cats, ref, prod).score
+        js = res[res["check_name"] == "token_hist_js"].set_index("partition_value")
+        assert js["is_drifted"].to_dict() == {"web": False, "books": False, "code": True}
+
+    def test_sampled_histogram(self, spark, fixture_small, completed_run, tmp_path):
+        """token_sample_fraction < 1 is logged in the results and the
+        lineage, is seeded, shrinks the histogram and leaves the
+        constraint checks alone."""
+        cur, base, dim, _ = fixture_small
+        _, full_report, _, _ = completed_run
+        settings = ValidationSettings(token_sample_fraction=0.5)
+        reports = []
+        for i in range(2):
+            out = str(tmp_path / f"sampled_{i}")
+            reports.append(
+                ValidationRun(spark, cur, base, dim, out, settings=settings).run(
+                    resume=False
+                )
+            )
+
+        def hist_rows(report):
+            res = report.results
+            return (
+                res[res["check_name"].isin(["token_hist_js", "token_hist_chi2"])]
+                .sort_values(["check_name", "partition_value"])
+                .reset_index(drop=True)
+            )
+
+        first, second = (hist_rows(r) for r in reports)
+        assert len(first) > 0
+        assert (first["details"].apply(lambda d: d["sample_fraction"]) == "0.5").all()
+        np.testing.assert_array_equal(
+            first["score"].to_numpy(), second["score"].to_numpy()
+        )
+        full = hist_rows(full_report)
+        ok = first["details"].apply(lambda d: "error" not in d)
+        sampled_sizes = first[ok]["details"].apply(lambda d: float(d["production_size"]))
+        full_sizes = full[ok]["details"].apply(lambda d: float(d["production_size"]))
+        assert (sampled_sizes < full_sizes).all()
+
+        lineage = spark.read.parquet(str(tmp_path / "sampled_0" / "manifest")).first()[
+            "lineage"
         ]
-        df = spark.createDataFrame(rows, "pcode int, tokens array<int>")
-
-        arrow = (
-            D.binned_counts_fixed_domain_arrow(
-                df, "pcode", "tokens", 256, (0, 50257)
-            )
-            .toPandas()
-            .sort_values(["pcode", "bin"])
-            .reset_index(drop=True)
-        )
-        from pyspark.sql import functions as F
-
-        # production explode path routes through clean_values -> drop nulls
-        exploded = df.select(
-            "pcode", F.explode("tokens").alias("token_id")
-        ).where(F.col("token_id").isNotNull())
-        # the explode plan's bin arithmetic (domain branch of
-        # _binned_counts_shared_range), side column dropped
-        lo, hi, n_bins = 0.0, 50257.0, 256
-        width = (hi - lo) / n_bins
-        raw = F.floor((F.col("token_id") - F.lit(lo)) / F.lit(width)).cast("int")
-        bin_col = (
-            F.when(F.col("token_id") == F.lit(hi), F.lit(n_bins - 1))
-            .otherwise(F.least(F.greatest(raw, F.lit(0)), F.lit(n_bins - 1)))
-        )
-        want = (
-            exploded.withColumn("bin", bin_col)
-            .groupBy("pcode", "bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .toPandas()
-            .sort_values(["pcode", "bin"])
-            .reset_index(drop=True)
-        )
-        assert len(arrow) == len(want)
-        assert (arrow["pcode"].to_numpy() == want["pcode"].to_numpy()).all()
-        assert (arrow["bin"].to_numpy() == want["bin"].to_numpy()).all()
-        assert (arrow["cnt"].to_numpy() == want["cnt"].to_numpy()).all()
-
-    def test_validation_pass_same_results_either_token_plan(self, spark, tmp_path):
-        from aumos_drift_detector_spark.plans.validation import (
-            ValidationRun,
-            ValidationSettings,
-        )
-        from aumos_drift_detector_spark.sources.synth import generate_token_tables
-
-        cur, base, dim, _exp = generate_token_tables(spark, n_rows=3000, seed=5)
-        reports = {}
-        for flag in (True, False):
-            run = ValidationRun(
-                spark, cur, base, dim, str(tmp_path / f"out_{flag}"),
-                settings=ValidationSettings(token_hist_arrow=flag),
-            )
-            reports[flag] = run.run(resume=False).results
-        a = reports[True].sort_values(["partition_value", "check_name", "feature"])
-        b = reports[False].sort_values(["partition_value", "check_name", "feature"])
-        assert list(a["check_name"]) == list(b["check_name"])
-        sa = a["score"].astype(float).to_numpy()
-        sb = b["score"].astype(float).to_numpy()
-        assert np.allclose(sa, sb, rtol=0, atol=0, equal_nan=True)
-
-
-class TestTokenHistPlanAuto:
-    """Cost-based auto selection of the token-histogram physical plan:
-    Catalyst scan-size estimate gates Arrow vs explode (both bitwise-equal,
-    so this is purely physical)."""
-
-    def _mk(self, spark, tmp_path, cur, base, dim, **kw):
-        from aumos_drift_detector_spark.plans.validation import (
-            ValidationRun,
-            ValidationSettings,
-        )
-
-        return ValidationRun(
-            spark, cur, base, dim, str(tmp_path / "out_auto"),
-            settings=ValidationSettings(**kw),
-        )
-
-    def test_auto_unknown_stats_resolves_to_explode(self, spark, tmp_path):
-        from aumos_drift_detector_spark.sources.synth import generate_token_tables
-
-        cur, base, dim, _ = generate_token_tables(spark, n_rows=500, seed=3)
-        run = self._mk(spark, tmp_path, cur, base, dim)  # defaults: auto
-        # in-memory frames report the Long.MaxValue leaf default -> explode
-        assert run._resolve_token_hist_arrow() is False
-        run.run(resume=False)
-        assert run.token_hist_plan == "explode"
-
-    def test_auto_threshold_gates_parquet_size(self, spark, tmp_path):
-        from aumos_drift_detector_spark.sources.synth import generate_token_tables
-
-        cur, base, dim, _ = generate_token_tables(spark, n_rows=500, seed=3)
-        cur.write.mode("overwrite").parquet(str(tmp_path / "cur_pq"))
-        base.write.mode("overwrite").parquet(str(tmp_path / "base_pq"))
-        cur_pq = spark.read.parquet(str(tmp_path / "cur_pq"))
-        base_pq = spark.read.parquet(str(tmp_path / "base_pq"))
-        # tiny table, default 1 GiB threshold -> explode
-        run = self._mk(spark, tmp_path, cur_pq, base_pq, dim)
-        assert run._resolve_token_hist_arrow() is False
-        # drop the threshold below the file size -> arrow
-        run = self._mk(
-            spark, tmp_path, cur_pq, base_pq, dim,
-            token_hist_arrow_min_bytes=1,
-        )
-        assert run._resolve_token_hist_arrow() is True
-        run.run(resume=False)
-        assert run.token_hist_plan == "arrow"
-
-    def test_pins_and_sampling_override_auto(self, spark, tmp_path):
-        from aumos_drift_detector_spark.sources.synth import generate_token_tables
-
-        cur, base, dim, _ = generate_token_tables(spark, n_rows=500, seed=3)
-        assert self._mk(
-            spark, tmp_path, cur, base, dim, token_hist_arrow=True
-        )._resolve_token_hist_arrow() is True
-        assert self._mk(
-            spark, tmp_path, cur, base, dim, token_hist_arrow=False
-        )._resolve_token_hist_arrow() is False
-        # sampling is defined over exploded rows: it beats even a True pin
-        assert self._mk(
-            spark, tmp_path, cur, base, dim,
-            token_hist_arrow=True, token_sample_fraction=0.5,
-        )._resolve_token_hist_arrow() is False
+        assert json.loads(lineage)["settings"]["token_sample_fraction"] == 0.5
+        for report in reports:
+            assert report.violation_counts == full_report.violation_counts
 
 
 class TestSessionConfigIndependence:
