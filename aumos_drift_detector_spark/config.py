@@ -1,19 +1,14 @@
-"""Engine configuration: thresholds, binning, and exact-vs-approx policy.
+"""Engine configuration: thresholds, binning, and the sketch-collect cap.
 
 Default thresholds mirror the reference's settings (reference settings.py:24-56
 and per-test defaults: PSI 0.2, p-value tests 0.05, JS/Hellinger/Wasserstein
-0.1, MMD 0.05). The concept-drift detectors (ADWIN, DDM, EDDM) are not
-configured here: they keep their own constructor defaults.
-
-`approx` switches the quantile/distinct machinery between exact (test parity
-with numpy: Spark `percentile`, `count_distinct`) and sketch-based
-(`percentile_approx` t-digest-style, `approx_count_distinct` HLL) for the
-10^12-row design point. See SURVEY.md §4.3.2.
+0.1). The concept-drift detectors (ADWIN, DDM, EDDM) and MMD are not
+configured here: they keep their own defaults.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -30,7 +25,6 @@ class EngineConfig:
     js_threshold: float = 0.1
     hellinger_threshold: float = 0.1
     wasserstein_threshold: float = 0.1
-    mmd_threshold: float = 0.05
 
     # binning
     psi_bins: int = 10        # reference psi.py num_bins default
@@ -41,8 +35,6 @@ class EngineConfig:
     chi2_max_categories: int = 10_000
 
     # physical policy
-    approx: bool = False              # exact quantiles/distinct for test parity
-    approx_percentile_accuracy: int = 10000
     # adaptive sketch-collect: PSI/KS/W1 build the per-value sketch once and
     # probe it with limit(cap + 1); when it fits, that probe is the collect
     # and a driver kernel finishes the test. A larger sketch means the

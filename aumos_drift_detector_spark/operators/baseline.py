@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from aumos_drift_detector_spark.config import DEFAULT_CONFIG, EngineConfig
 from aumos_drift_detector_spark.operators.profile import histogram, profile_columns
 
 BASELINE_SCHEMA = T.StructType(
@@ -64,7 +63,6 @@ def capture_baseline(
     window_days: int = 0,
     is_active: bool = True,
     n_hist_bins: int = 20,
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Profile + histogram every column (per partition) into baseline rows.
 
@@ -72,7 +70,7 @@ def capture_baseline(
     the reference's contract (baseline_manager.py:305-306).
     """
     group = [partition_col] if partition_col else []
-    prof = profile_columns(df, columns, group, config).toPandas()
+    prof = profile_columns(df, columns, group).toPandas()
 
     empty = prof[prof["count"] == 0]
     if len(empty):

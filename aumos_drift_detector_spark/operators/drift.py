@@ -351,9 +351,10 @@ def per_value_sketch(
     (``cast_double=False``). Running tests off one sketch instead of one
     scan each removes the repeated scans and driver/codegen latency — the
     Amdahl term that capped end-to-end 8->32 scaling at 0.66 in round 1.
-    ``fused_tests_from_sketch`` collects the whole sketch, so it suits
-    bounded distinct-value sets (token counts, categorical ints); the
-    *_test_grouped operators switch to the distributed plan over the cap.
+    The validation pass collects the whole sketch into
+    ``_verdicts_from_sketch``, so it suits bounded distinct-value sets
+    (token counts, categorical ints); the *_test_grouped operators switch
+    to the distributed plan over the cap.
 
     ``keep_nulls=True`` skips the finite filter so NULL values appear as one
     ``v IS NULL`` row per group — letting ``profile_from_sketch`` compute
@@ -1248,34 +1249,6 @@ def chi2_test(ref_df, prod_df, column, threshold=None,
     threshold = config.chi2_threshold if threshold is None else threshold
     frame = chi2_test_grouped(ref_df, prod_df, column, (), threshold, config)
     return _single(frame, "chi_squared", threshold, column)
-
-
-# ---------------------------------------------------------------------------
-# Fused per-value-sketch path: ONE distributed pass feeds PSI + KS + JS + W1
-# ---------------------------------------------------------------------------
-
-def fused_tests_from_sketch(
-    sketch_pdf: pd.DataFrame,
-    group_cols: Sequence[str],
-    column: str,
-    config: EngineConfig = DEFAULT_CONFIG,
-) -> dict[str, pd.DataFrame]:
-    """PSI + KS + JS + W1 grouped verdict frames from ONE collected sketch.
-
-    The kernel table of the standalone tests' collect plan, all four at
-    once: the same scores and error strings as the *_test_grouped
-    operators for one Spark job instead of four. Driver cost is
-    O(groups x distinct values) — the collected sketch.
-    """
-    frames = _verdicts_from_sketch(
-        sketch_pdf, group_cols, column, config, ("psi", "ks", "js", "w1")
-    )
-    return {
-        "psi": frames["psi"],
-        "ks": frames["ks"],
-        "jensen_shannon": frames["js"],
-        "wasserstein": frames["w1"],
-    }
 
 
 _PROFILE_PROBS = np.array([0.25, 0.50, 0.75, 0.95, 0.99])

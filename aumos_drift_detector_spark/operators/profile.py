@@ -23,8 +23,6 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from aumos_drift_detector_spark.config import DEFAULT_CONFIG, EngineConfig
-
 PROFILE_PERCENTILES = [0.25, 0.50, 0.75, 0.95, 0.99]
 
 
@@ -70,7 +68,6 @@ def profile_columns(
     df: DataFrame,
     columns: Sequence[str],
     group_cols: Sequence[str] = (),
-    config: EngineConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Wide per-(group, column) statistical profile in one aggregation pass.
 
@@ -82,27 +79,21 @@ def profile_columns(
     null_fraction, unique_count, total_rows)``
 
     std is the POPULATION std (numpy default, baseline_manager.py:314).
-    unique_count is exact or HLL depending on ``config.approx``.
+    Percentiles (linear interpolation) and unique_count are exact.
     """
     aggs: list[Column] = [F.count(F.lit(1)).alias("total_rows")]
     for col in columns:
         v = _finite(F.col(col))
-        uniq = (
-            F.approx_count_distinct(v) if config.approx else F.count_distinct(v)
-        )
-        pct = (
-            F.percentile_approx(v, PROFILE_PERCENTILES, config.approx_percentile_accuracy)
-            if config.approx
-            else F.percentile(v, F.array(*[F.lit(p) for p in PROFILE_PERCENTILES]))
-        )
         aggs += [
             F.count(v).alias(f"{col}__count"),
             F.avg(v).alias(f"{col}__mean"),
             F.stddev_pop(v).alias(f"{col}__std"),
             F.min(v).alias(f"{col}__min"),
             F.max(v).alias(f"{col}__max"),
-            pct.alias(f"{col}__pct"),
-            uniq.alias(f"{col}__unique"),
+            F.percentile(v, F.array(*[F.lit(p) for p in PROFILE_PERCENTILES])).alias(
+                f"{col}__pct"
+            ),
+            F.count_distinct(v).alias(f"{col}__unique"),
         ]
 
     wide = df.groupBy(*[F.col(g) for g in group_cols]).agg(*aggs)

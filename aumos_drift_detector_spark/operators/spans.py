@@ -17,10 +17,12 @@ Scale plan (every stage keyed, no all-pairs anywhere):
      (map-side partial combine collapses each partition's repeats first);
   3. duplicated spans join back by hash — the duplicated-span dim is
      orders smaller than the corpus and AQE broadcasts it when it fits;
-  4. covered word positions: explode of exactly k positions per
-     duplicated span occurrence, then a distinct keyed by (doc, pos);
-  5. cleaning: anti-join words against covered positions and reassemble
-     per document (sort_array over collected (pos, word) structs).
+  4. the per-document mask: one groupBy(doc) over the duplicated span
+     occurrences yields the span count and the distinct covered word
+     positions (an array bounded by the document's word count);
+  5. cleaning: one left join of the documents to their masks, then a
+     per-row ``array_except`` of the covered positions from 0..n-1 (a
+     hash set, linear in document length) picks the kept words in order.
 
 Hashing follows the ``dedup.py`` convention: ``xxhash64`` (fast JVM path,
 default) or ``md5_60`` (bit-identical in any SQL engine with md5 — the
@@ -131,18 +133,18 @@ def span_dedup_stats(
     ``graph.py``.
     """
     words_col = _clean_words(F.col(text_col))
-    # The split-words base feeds four branches (span explode x2, word
-    # positions, per-doc stats).  Without truncation each branch re-scans
-    # the input and re-runs the split — and Catalyst pushes the
-    # size(_ws)>0 filter BELOW the widening repartition, so the expensive
-    # split ran at input-file parallelism once per branch (measured 4
-    # separate 2-task scan stages ~7s of the sf1.0 wall).  A LAZY
-    # localCheckpoint materializes (id, words) exactly once, 32-wide,
-    # and every branch reads the shared RDD.  Storage is one split copy
-    # of the corpus (memory-and-disk) — the right trade against 4 full
-    # re-scan+re-split passes once the corpus is past a few MB; below
-    # that (``worth_materializing``) the fixed materialization latency
-    # outweighs recompute and the plain branching plan wins.
+    # The split-words base feeds three branches (the span explode of the
+    # dup dim, the span explode of the mask, the cleaning join).  Without
+    # truncation each branch re-scans the input and re-runs the split —
+    # and Catalyst pushes the size(_ws)>0 filter BELOW the widening
+    # repartition, so the expensive split ran at input-file parallelism
+    # once per branch (measured ~7s of the sf1.0 wall when there were
+    # four).  A LAZY localCheckpoint materializes (id, words) exactly
+    # once, 32-wide, and every branch reads the shared RDD.  Storage is
+    # one split copy of the corpus (memory-and-disk) — the right trade
+    # against full re-scan+re-split passes once the corpus is past a few
+    # MB; below that (``worth_materializing``) the fixed materialization
+    # latency outweighs recompute and the plain branching plan wins.
     ckpt = _worth_ckpt(df)
     base = _widen(df).select(F.col(id_col), words_col.alias("_ws"))
     if ckpt:
@@ -165,13 +167,13 @@ def span_dedup_stats(
             id_col, "pos", _base_hash(F.col("span"), hash_fn).alias("span_h")
         )
 
-    # The dup dim is the plan's reuse point: every downstream branch
-    # needs it, and without truncation Catalyst re-executes the 2-shuffle
-    # distinct-doc aggregation once PER branch (measured: 3x in the
-    # physical plan).  It is the aggregated, >=min_dup_docs-filtered dim
-    # — orders smaller than the corpus — so a LAZY localCheckpoint turns
-    # it into one shared RDD node (Scan ExistingRDD) that the first
-    # action computes exactly once; unlike graph.py's iterative loop
+    # The dup dim joins back to the same span explode it aggregates.
+    # Without truncation its 2-shuffle distinct-doc aggregation sits
+    # inside the main plan (3 hash exchanges instead of 2).  It is the
+    # aggregated, >=min_dup_docs-filtered dim — orders smaller than the
+    # corpus — so a LAZY localCheckpoint turns it into an RDD node
+    # (Scan ExistingRDD) that the first action computes once and the
+    # mask join can broadcast; unlike graph.py's iterative loop
     # (which needs eager=True to cut per-round lineage), nothing here
     # justifies running a corpus-scale job at plan-CONSTRUCTION time.
     dup = (
@@ -180,77 +182,45 @@ def span_dedup_stats(
         .localCheckpoint(eager=False)
     )
 
-    # one row per (doc, duplicated span start): pos is unique per doc in
-    # pos_spans by construction, so dup_spans is a plain count — no
-    # count_distinct Expand needed.  LAZY checkpoint, deliberately: the
-    # two consumer branches (per-doc span count, covered-positions
-    # explode) can race to compute the uncached subtree when their stages
-    # launch in the same wave — measured ~1-2s of duplicated work at
-    # sf1.0 — but eager=True materializes through queryExecution.toRdd
-    # WITHOUT adaptive execution, and the resulting static-planned
-    # checkpoint jobs measured 3-6x the CPU of the AQE-planned lazy path
-    # (51.9s vs 7.4s end to end).  The race is the cheaper evil.
-    dup_pos = pos_spans.join(dup, "span_h")
-    if ckpt:
-        dup_pos = dup_pos.localCheckpoint(eager=False)
-    dup_span_counts = dup_pos.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("dup_spans")
-    )
-    # distinct word positions under any duplicated span — consumed ONLY by
-    # the cleaning anti-join (so no checkpoint: a single consumer reuses
-    # nothing): covered_words needs no aggregation of its own because it
-    # equals n_words - cleaned_n_words exactly (the cleaning keeps
-    # precisely the uncovered positions), so the per-doc covered count and
-    # its join are derived in the final select instead.
-    covered = dup_pos.select(
-        id_col,
-        F.explode(
-            F.sequence(F.col("pos"), F.col("pos") + (k - 1))
-        ).alias("wpos"),
-    ).distinct()
-
-    words_pos = base.select(
-        id_col, F.posexplode("_ws").alias("wpos", "word")
-    )
-    cleaned = (
-        words_pos.join(covered, [id_col, "wpos"], "left_anti")
+    # The per-document mask: one row per document with a duplicated span,
+    # carrying its span count and the distinct word positions those spans
+    # cover (at most n_words of them).  pos is unique per doc in pos_spans
+    # by construction, so dup_spans is a plain count.  This aggregation is
+    # the only consumer of the (doc, duplicated span start) join.
+    mask = (
+        pos_spans.join(dup, "span_h")
         .groupBy(id_col)
         .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("wpos", "word"))),
-                    lambda s: s["word"],
-                ),
-                " ",
-            ).alias("cleaned_text"),
-            F.count(F.lit(1)).alias("cleaned_n_words"),
+            F.count(F.lit(1)).alias("dup_spans"),
+            F.array_distinct(
+                F.flatten(
+                    F.collect_list(F.sequence(F.col("pos"), F.col("pos") + (k - 1)))
+                )
+            ).alias("_cov"),
         )
     )
-
-    stats = base.select(
+    # Unmasked documents (and a NULL id, which no join key matches) get an
+    # empty mask.  size() is taken only of the coalesced array: with ANSI
+    # off, size(NULL) is -1.  array_except builds a hash set of the covered
+    # positions, so cleaning is linear in the document's length, and it
+    # keeps the word order of the sequence.
+    cov = F.coalesce("_cov", F.array().cast("array<int>"))
+    kept = F.array_except(F.sequence(F.lit(0), F.size("_ws") - 1), cov)
+    masked = base.join(mask, id_col, "left").select(
         id_col,
         F.size("_ws").alias("n_words"),
         F.greatest(F.size("_ws") - (k - 1), F.lit(0)).alias("n_spans"),
+        F.coalesce("dup_spans", F.lit(0)).cast("long").alias("dup_spans"),
+        F.size(cov).cast("long").alias("covered_words"),
+        F.transform(kept, lambda i: F.element_at("_ws", i + 1)).alias("_cleaned"),
     )
-    # covered_words == n_words - cleaned_n_words: the anti-join keeps
-    # exactly the uncovered positions, a doc with zero covered words keeps
-    # a cleaned row counting all its words (-> 0), and a fully-covered doc
-    # has no cleaned row (coalesce 0 -> covered_words = n_words).
-    covered_words = (
-        F.col("n_words") - F.coalesce("cleaned_n_words", F.lit(0))
-    ).cast("long")
-    out = (
-        stats.join(dup_span_counts, id_col, "left")
-        .join(cleaned, id_col, "left")
-        .select(
-            id_col,
-            "n_words",
-            "n_spans",
-            F.coalesce("dup_spans", F.lit(0)).cast("long").alias("dup_spans"),
-            covered_words.alias("covered_words"),
-            F.round(covered_words / F.col("n_words"), 6).alias("dup_span_frac"),
-            F.coalesce("cleaned_n_words", F.lit(0)).cast("long").alias("cleaned_n_words"),
-            F.md5(F.coalesce("cleaned_text", F.lit(""))).alias("cleaned_md5"),
-        )
+    return masked.select(
+        id_col,
+        "n_words",
+        "n_spans",
+        "dup_spans",
+        "covered_words",
+        F.round(F.col("covered_words") / F.col("n_words"), 6).alias("dup_span_frac"),
+        F.size("_cleaned").cast("long").alias("cleaned_n_words"),
+        F.md5(F.array_join("_cleaned", " ")).alias("cleaned_md5"),
     )
-    return out

@@ -468,8 +468,8 @@ class ValidationRun:
             prof = D.profile_from_sketch(
                 sketch_pdf, (part,), s.ntok_col, side="prod"
             )
-            fused = D.fused_tests_from_sketch(
-                sketch_pdf, (part,), s.ntok_col, s.engine
+            fused = D._verdicts_from_sketch(
+                sketch_pdf, (part,), s.ntok_col, s.engine, ("psi", "ks", "js")
             )
             tok_counts_pdf = futs["token_hist"].result()
             # true span of the job pool (r5 fix: this used to be stamped
@@ -560,8 +560,8 @@ class ValidationRun:
                 )
             )
 
-        for test_name in ("psi", "ks", "jensen_shannon"):
-            self._record_drift(fused[test_name], test_name, batch_rows, now, part)
+        for test, check_name in (("psi", "psi"), ("ks", "ks"), ("js", "jensen_shannon")):
+            self._record_drift(fused[test], check_name, batch_rows, now, part)
 
         if tok_counts_pdf is not None:
             extra = {
@@ -602,7 +602,6 @@ class ValidationRun:
                 "inputs": {"current": "df", "baseline": "df"},
                 "settings": {
                     "token_sample_fraction": s.token_sample_fraction,
-                    "approx": s.engine.approx,
                 },
             }
         )

@@ -9,7 +9,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from aumos_drift_detector_spark.config import DEFAULT_CONFIG
 from aumos_drift_detector_spark.operators import drift
+
+# every kernel the collect plan runs over one collected sketch
+ALL_TESTS = ("psi", "ks", "js", "w1")
 
 
 class TestKsOperator:
@@ -595,7 +599,8 @@ class TestChi2HighCardinalityGuard:
 
 
 class TestFusedSketchParity:
-    """fused_tests_from_sketch must reproduce the three grouped operators."""
+    """The verdicts from one collected sketch must reproduce the three
+    grouped operators."""
 
     def _frames(self, spark):
         rng = np.random.default_rng(13)
@@ -614,13 +619,13 @@ class TestFusedSketchParity:
     def test_matches_individual_operators(self, spark):
         ref, prod = self._frames(spark)
         sketch = drift.per_value_sketch(ref, prod, "value", ("g",)).toPandas()
-        fused = drift.fused_tests_from_sketch(sketch, ("g",), "value")
+        fused = drift._verdicts_from_sketch(sketch, ("g",), "value", DEFAULT_CONFIG, ALL_TESTS)
 
         psi = drift.psi_test_grouped(ref, prod, "value", ("g",))
         ks = drift.ks_test_grouped(ref, prod, "value", ("g",))
         js = drift.js_test_grouped(ref, prod, "value", ("g",))
 
-        for name, frame in [("psi", psi), ("ks", ks), ("jensen_shannon", js)]:
+        for name, frame in [("psi", psi), ("ks", ks), ("js", js)]:
             got = fused[name].sort_values("g").reset_index(drop=True)
             want = frame.sort_values("g").reset_index(drop=True)
             assert list(got["g"]) == list(want["g"]), name
@@ -648,7 +653,7 @@ class TestFusedSketchParity:
         )
         ref, prod = spark.createDataFrame(pdf_ref), spark.createDataFrame(pdf_prod)
         sketch = drift.per_value_sketch(ref, prod, "value", ("g",)).toPandas()
-        fused = drift.fused_tests_from_sketch(sketch, ("g",), "value")
+        fused = drift._verdicts_from_sketch(sketch, ("g",), "value", DEFAULT_CONFIG, ALL_TESTS)
         psi = drift.psi_test_grouped(ref, prod, "value", ("g",))
 
         got = dict(zip(fused["psi"]["g"], fused["psi"]["error"]))
@@ -817,9 +822,9 @@ class TestAdaptiveSketchPlans:
         ref = value_df_factory(np.round(rng.normal(0, 1, 2000), 2))
         prod = value_df_factory(np.round(rng.normal(0.4, 1, 2000), 2))
         sketch = drift.per_value_sketch(ref, prod, "value").toPandas()
-        fused = drift.fused_tests_from_sketch(sketch, (), "value")
+        fused = drift._verdicts_from_sketch(sketch, (), "value", DEFAULT_CONFIG, ALL_TESTS)
         standalone = drift.wasserstein_test(ref, prod, "value")
-        row = fused["wasserstein"].iloc[0]
+        row = fused["w1"].iloc[0]
         assert row["error"] is None
         assert float(row["score"]) == pytest.approx(standalone.score, rel=1e-12)
 
@@ -1064,9 +1069,9 @@ class TestThousandGroupScale:
         wall_1000 = float("inf")
         for _ in range(2):
             t0 = time.monotonic()
-            fused = drift.fused_tests_from_sketch(sketch, ("g",), "x")
+            fused = drift._verdicts_from_sketch(sketch, ("g",), "x", DEFAULT_CONFIG, ALL_TESTS)
             wall_1000 = min(wall_1000, time.monotonic() - t0)
-        for name in ("psi", "ks", "jensen_shannon", "wasserstein"):
+        for name in ("psi", "ks", "js", "w1"):
             frame = fused[name]
             assert len(frame) == self.N_GROUPS, name
             assert frame["error"].isna().all(), name
@@ -1083,8 +1088,8 @@ class TestThousandGroupScale:
         for gi in rng.choice(self.N_GROUPS, 8, replace=False):
             gname = f"p{gi}"
             sub = sketch[sketch["g"] == gname].drop(columns=["g"])
-            single = drift.fused_tests_from_sketch(sub, (), "x")
-            for name in ("psi", "ks", "jensen_shannon", "wasserstein"):
+            single = drift._verdicts_from_sketch(sub, (), "x", DEFAULT_CONFIG, ALL_TESTS)
+            for name in ("psi", "ks", "js", "w1"):
                 got = fused[name].set_index("g").loc[gname]
                 want = single[name].iloc[0]
                 assert got["score"] == pytest.approx(want["score"], rel=0, abs=0), (
@@ -1098,7 +1103,7 @@ class TestThousandGroupScale:
         wall_250 = float("inf")
         for _ in range(2):
             t0 = time.monotonic()
-            drift.fused_tests_from_sketch(quarter, ("g",), "x")
+            drift._verdicts_from_sketch(quarter, ("g",), "x", DEFAULT_CONFIG, ALL_TESTS)
             wall_250 = min(wall_250, time.monotonic() - t0)
         assert wall_1000 < 10 * max(wall_250, 1e-3), (wall_1000, wall_250)
         assert wall_1000 < 30.0  # absolute sanity bound

@@ -231,9 +231,14 @@ class TestTokenFamilyPlans:
         )
         assert not span_aggs, "dup-span dim aggregation re-executed in a branch"
         assert "Scan ExistingRDD" in plan
-        # the corpus-scale shingle explode appears at most twice (counts
-        # branch + covered/cleaning branch) — 3+ means a branch regressed
-        assert plan.count("posexplode(CASE WHEN") <= 2
+        # one per-document mask: the corpus-scale shingle explode feeds one
+        # aggregation, no word is exploded, and cleaning is an array
+        # expression, not an anti-join; the only shuffles are the mask's
+        # groupBy(doc) and the documents' side of the mask join
+        assert plan.count("posexplode(CASE WHEN") == 1
+        assert "posexplode(_ws" not in plan
+        assert "LeftAnti" not in plan
+        assert plan.count("Exchange hashpartitioning") <= 2
 
     def test_lm_no_cartesian_and_dims_broadcast(self, spark, parquet_tables):
         from aumos_drift_detector_spark.operators.lm import lm_perplexity

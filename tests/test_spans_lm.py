@@ -7,8 +7,10 @@ from __future__ import annotations
 import hashlib
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
+from aumos_drift_detector_spark.operators import spans
 from aumos_drift_detector_spark.operators.lm import (
     lm_perplexity,
     stupid_backoff_scores,
@@ -124,6 +126,60 @@ def test_span_dedup_md5_60_matches_xxhash64(spark):
     a = span_dedup_stats(df, "doc_id", "text", k=3, hash_fn="xxhash64")
     b = span_dedup_stats(df, "doc_id", "text", k=3, hash_fn="md5_60")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+# k=3. Docs 1/2 share two overlapping spans (doc 2 is fully covered);
+# doc 7 repeats a span that doc 9 also holds; the NULL-id doc shares
+# "t u v" with doc 8; docs 3-5 have no words; doc 6 is shorter than k.
+_ADVERSARIAL = [
+    (1, "p q x y z w r"),
+    (2, "x y z w"),
+    (3, None),
+    (4, ""),
+    (5, "  \t  "),
+    (6, "a b"),
+    (7, "m n o m n o q"),
+    (8, "s t u v"),
+    (9, "m n o"),
+    (None, "t u v e f g"),
+]
+# (n_words, n_spans, dup_spans, covered_words, dup_span_frac,
+#  cleaned_n_words, cleaned text)
+_ADVERSARIAL_EXPECTED = {
+    1: (7, 5, 2, 4, round(4 / 7, 6), 3, "p q r"),
+    2: (4, 2, 2, 4, 1.0, 0, ""),
+    6: (2, 0, 0, 0, 0.0, 2, "a b"),
+    7: (7, 5, 2, 6, round(6 / 7, 6), 1, "q"),
+    8: (4, 2, 1, 3, 0.75, 1, "s"),
+    9: (3, 1, 1, 3, 1.0, 0, ""),
+    # a NULL id matches no mask: it comes out unmasked, even though its
+    # "t u v" counts as one of the two documents that duplicate the span
+    None: (6, 4, 0, 0, 0.0, 6, "t u v e f g"),
+}
+
+
+@pytest.mark.parametrize("hash_fn", ["xxhash64", "md5_60"])
+@pytest.mark.parametrize("ansi", ["true", "false"])
+@pytest.mark.parametrize("gate", [True, False], ids=["ckpt", "no_ckpt"])
+def test_span_dedup_same_rows_for_every_gate_ansi_and_hash(
+    spark, monkeypatch, gate, ansi, hash_fn
+):
+    monkeypatch.setattr(spans, "_worth_ckpt", lambda df: gate)
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        rows = span_dedup_stats(
+            _docs(spark, _ADVERSARIAL), "doc_id", "text", k=3, hash_fn=hash_fn
+        ).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    got = {r["doc_id"]: tuple(r)[1:] for r in rows}
+    assert len(rows) == len(got)
+    assert got == {
+        i: (*e[:6], _md5(e[6])) for i, e in _ADVERSARIAL_EXPECTED.items()
+    }
+    for r in rows:
+        assert r["covered_words"] + r["cleaned_n_words"] == r["n_words"]
 
 
 # ---------------------------------------------------------------------------
